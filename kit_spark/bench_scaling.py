@@ -5,10 +5,11 @@ Prints one JSON line {"cores": c, "n_urls": n, "elapsed_sec": t,
 "urls_per_sec": r, "scheduled": s}.
 
 The job is one full crawl round at fixed input size (strong scaling):
-distributed synthesis of n messy URLs -> canonicalize UDF (D1) ->
-batch dedup + anti-join vs a 10%-sized seen set (D2) -> robots gate with a
+distributed synthesis of n messy URLs, then the crawl's own round
+composition (crawl.plan_round: canonicalize UDF (D1) -> batch dedup +
+anti-join vs a 10%-sized seen set (D2) -> robots compile and gate with a
 mixed rule/always cache (D5) -> salted politeness top-k (D3/D4) ->
-deterministic global sequence (D9) -> simulated fetch with the per-row
+deterministic global sequence (D9)), then a simulated fetch with the per-row
 image invariant (D7: synthesize, encode, decode, PSNR + caption check —
 the north rule's verification is part of the engine's hot loop).  The
 N -> 4N core ratio is the sandbox proxy for the executor-scaling
@@ -25,9 +26,6 @@ import time
 
 def build_frontier_job(spark, n_urls: int):
     from pyspark.sql import functions as F
-
-    from kit_spark.functions.robots_udfs import make_compile_udf
-    from kit_spark.operators.frontier import admit_candidates
 
     n_hosts = max(64, n_urls // 4096)  # Zipf-free but wide host space
     base = spark.range(0, n_urls, numPartitions=spark.sparkContext.defaultParallelism)
@@ -55,11 +53,7 @@ def run(cores: int, n_urls: int) -> dict:
     os.environ["SPARK_GRAFT_CPUS"] = str(cores)
     from pyspark.sql import functions as F
 
-    from kit_spark.functions.robots_udfs import (gate_allowed_relational,
-                                              make_compile_udf)
-    from kit_spark.operators.frontier import (admit_candidates,
-                                              politeness_schedule,
-                                              sequence_schedule)
+    from kit_spark.crawl import plan_round
     from kit_spark.session import get_spark
 
     spark = get_spark(f"bench_scaling_{cores}", cores=cores,
@@ -89,53 +83,18 @@ def run(cores: int, n_urls: int) -> dict:
 
     robots_body = (b"User-agent: *\nDisallow: /private/\nDisallow: /*.tmp$\n"
                    b"Allow: /img/\nCrawl-delay: 0.01\n")
-
-    import os as _os
-    debug = _os.environ.get("KIT_BENCH_DEBUG") == "1"
-    marks = [time.perf_counter()]
-
-    def mark(label):
-        if debug:
-            marks.append(time.perf_counter())
-            print(f"## {label}: {marks[-1]-marks[-2]:.2f}s", file=sys.stderr)
-
-    t0 = time.perf_counter()
-    # the crawl driver persists per-round state (crawl.py caches admitted);
-    # mirror that here so union branches and windows share one computation
-    admitted = admit_candidates(urls, seen).persist()
-    if debug:
-        admitted.count(); mark("admit")
-    # spread the tiny compile stage across workers: after distinct, AQE
-    # coalesces ~400 hosts into one task, serializing the UDF stage
-    hosts = admitted.select("host_key").distinct() \
-        .repartition(cores) \
+    # one robots.txt per host; a quarter of the hosts redirect (always-allow)
+    robots_docs = spark.range(n_hosts).select(
+        F.concat(F.lit("https://h"), F.col("id").cast("string"),
+                 F.lit(".example.com:443")).alias("host_key")) \
         .withColumn("access_state",
                     F.when(F.xxhash64("host_key") % 4 == 0,
                            F.lit("redirect")).otherwise(F.lit("successful"))) \
         .withColumn("body", F.lit(robots_body))
-    compiled = hosts.withColumn(
-        "__r", make_compile_udf("kitbot", True)(F.col("access_state"), F.col("body"))) \
-        .select("host_key", F.col("__r.always").alias("always"),
-                F.col("__r.rules").alias("rules"),
-                F.col("__r.crawl_delay").alias("crawl_delay"))
-    if debug:
-        compiled.persist().count(); mark("compile")
-    gated = gate_allowed_relational(admitted.join(compiled, "host_key"))
-    pending = gated.where(F.col("allowed")).select(
-        "url_canon", "host_key", "priority", "crawl_delay").persist()
-    if debug:
-        pending.count(); mark("gate")
-    # host space is n_urls/4096 hosts of ~4k rows each — known skew-free,
-    # so skip the detection job inside the timed window
-    selected = politeness_schedule(pending, round_seconds=60.0,
-                                   default_delay=10.0, salt_buckets=8,
-                                   skewed_hosts=[])
-    if debug:
-        selected = selected.persist()
-        selected.count(); mark("politeness")
-    scheduled = sequence_schedule(selected)
-    if debug:
-        scheduled.persist().count(); mark("sequence")
+
+    t0 = time.perf_counter()
+    scheduled = plan_round(urls, seen, robots_docs, round_seconds=60.0,
+                           default_delay=10.0).schedule
 
     # D7: simulated fetch + per-row invariant over the scheduled URLs.
     # Images are derived from the URL id (pure function), so no image
@@ -172,7 +131,6 @@ def run(cores: int, n_urls: int) -> dict:
     agg = verified.agg(F.sum(F.col("fetch_ok").cast("long")).alias("ok"),
                        F.count("*").alias("n")).collect()[0]
     n_scheduled = int(agg["n"])
-    mark("verify")
     assert agg["ok"] == n_scheduled, "fetch invariant failed in bench"
     elapsed = time.perf_counter() - t0
     spark.stop()

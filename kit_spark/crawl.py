@@ -4,13 +4,18 @@ Each round is one dataflow over snapshot tables (sources/tables.py; Iceberg
 on a real cluster), mirroring ``kit_py.crawler.crawl`` step for step so the
 distributed schedule equals the single-threaded reference *exactly*
 (tests/test_crawl_e2e.py asserts (round, seq, url_canon) equality and final
-URL-seen set equality):
+URL-seen set equality).
+
+``plan_round`` is the one composition of a frontier round (steps 1-4); the
+crawl driver, the ``frontier_round`` catalog entry (queries.py) and the
+scaling bench (bench_scaling.py) all build their round with it and differ
+only in their inputs and sinks.  The driver adds steps 5-6 and the commits:
 
 1. admit candidates: canonicalize (D1) -> batch-dedup by max priority ->
    left_anti vs url_seen (D2) with optional sharded-Bloom prefilter
-2. resolve robots for new hosts (S1-S4 compile UDF), expand their sitemaps
-   depth<=1 (S5-S9/D6) into next-round candidates
-3. gate new frontier entries (D5: host-key join + first-match UDF);
+2. resolve robots for new hosts (S1-S4 compile UDF); the driver expands
+   their sitemaps depth<=1 (S5-S9/D6) into next-round candidates
+3. gate new frontier entries (D5: host-key join + zero-Python first match);
    robots never change mid-crawl, so gating once at admission is
    equivalent to the oracle's per-round re-gate
 4. politeness + priority schedule (D3/D4 two-phase salted top-k) and the
@@ -31,13 +36,13 @@ from __future__ import annotations
 
 from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass
+from typing import NamedTuple
 
 from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
 
 from kit_spark import lifecycle
 from kit_spark.functions.bloom import build_bloom, merge_bloom
 from kit_spark.functions.robots_udfs import (ROBOTS_CACHE_SCHEMA,
-                                             gate_allowed,
                                              gate_allowed_relational,
                                              make_compile_udf)
 from kit_spark.kit_py.crawler import PRIORITY_LINK, PRIORITY_SEED
@@ -65,6 +70,79 @@ LINEAGE_SCHEMA = "round int, table string, snapshot string, rows long"
 STATE_TABLES = ("candidates", "frontier", "url_seen", "robots_cache",
                 "schedule", "fetch_log", "metrics", "lineage",
                 "url_seen_bloom")
+SEEN_BUCKETS = 16  # url_seen's stable bucket layout (bucketed_by_url)
+
+
+class RoundPlan(NamedTuple):
+    admitted: DataFrame  # new canonical URLs: the url_seen delta
+    robots_new: DataFrame  # compiled robots of hosts seen for the first time
+    pending: DataFrame  # prior frontier + newly allowed URLs
+    schedule: DataFrame  # (round, seq, url_canon, host_key, priority)
+
+
+def plan_round(candidates: DataFrame, url_seen: DataFrame,
+               robots_docs: DataFrame, *,
+               robots_cache: DataFrame | None = None,
+               frontier: DataFrame | None = None,
+               bloom: DataFrame | None = None,
+               round_no: int = 0, user_agent: str = "kitbot",
+               round_seconds: float, default_delay: float) -> RoundPlan:
+    """One frontier round as lazy DataFrames: admit -> robots compile ->
+    gate -> politeness -> sequence.
+
+    ``candidates``: (url, priority) — ``url_seen``: (url_canon) —
+    ``robots_docs``: (host_key, access_state, body); hosts it lacks compile
+    as ``unavailable``.  ``robots_cache``/``frontier`` carry the prior
+    rounds' state (None: nothing known yet), ``bloom`` the url_seen Bloom
+    table that prefilters admission.  ``admitted``, ``robots_new`` and
+    ``pending`` are pinned on the shared lifecycle, as the round scans each
+    of them more than once; ``lifecycle.release()`` frees them once the
+    caller's sinks ran.  A caller with several sinks on ``schedule`` pins
+    it itself.
+    """
+    # 1. admission (D1/D2): canon + batch dedup + bloom-pruned anti-join
+    admitted = lifecycle.track(
+        admit_candidates(candidates, url_seen, bloom_table=bloom))
+
+    # 2. robots for new hosts (S1-S4)
+    new_hosts = admitted.select("host_key").distinct()
+    if robots_cache is not None:
+        new_hosts = new_hosts.join(robots_cache.select("host_key"),
+                                   "host_key", "left_anti")
+    robots_new = lifecycle.track(
+        new_hosts.join(robots_docs, "host_key", "left")
+        .withColumn("access_state",
+                    F.coalesce("access_state", F.lit("unavailable")))
+        .withColumn("__r", make_compile_udf(user_agent)(
+            F.col("access_state"), F.col("body")))
+        .select("host_key", "access_state",
+                F.col("__r.user_agent").alias("user_agent"),
+                F.col("__r.always").alias("always"),
+                F.col("__r.rules").alias("rules"),
+                F.col("__r.crawl_delay").alias("crawl_delay"),
+                F.col("__r.sitemaps").alias("sitemaps")))
+    robots_cache = (robots_new if robots_cache is None
+                    else robots_cache.unionByName(robots_new))
+
+    # 3. gate the newly admitted entries (D5); robots never change
+    # mid-crawl, so the frontier carried over was gated on admission
+    gated = gate_allowed_relational(admitted.join(
+        robots_cache.select("host_key", "always", "rules"),
+        "host_key", "left"))
+    allowed = gated.where(F.col("allowed")).select(
+        "url_canon", "host_key", "match_path", "priority")
+    # politeness scans pending up to three times
+    pending = lifecycle.track(
+        allowed if frontier is None else frontier.unionByName(allowed))
+
+    # 4. schedule (D3/D4/D9)
+    with_delay = pending.join(robots_cache.select("host_key", "crawl_delay"),
+                              "host_key", "left")
+    selected = politeness_schedule(with_delay, round_seconds, default_delay)
+    schedule = sequence_schedule(selected).select(
+        F.lit(round_no).alias("round"), F.col("seq"),
+        "url_canon", "host_key", "priority")
+    return RoundPlan(admitted, robots_new, pending, schedule)
 
 
 @dataclass
@@ -73,12 +151,6 @@ class SparkCrawlConfig:
     round_seconds: float = 60.0
     default_delay: float = 10.0
     max_rounds: int = 50
-    optimal: bool = True
-    relational_gate: bool = True  # zero-Python Catalyst gate (paths are
-    # canonical in the driver, its contract); False = Arrow-UDF gate
-    salt_buckets: int = 8
-    skew_threshold: int = 500_000  # pending-per-host above which to salt
-    seen_buckets: int = 16
     use_bloom: bool = False  # prefilter before the exact anti-join
     broadcast_fixture_tables: bool = True  # sandbox-size fixtures only
 
@@ -102,8 +174,6 @@ class CrawlDriver:
         self.sitemap_docs = sitemap_docs
         self.links = links
         self.config = config or SparkCrawlConfig()
-        self._compile_udf = make_compile_udf(self.config.user_agent,
-                                             self.config.optimal)
         self._snapshots: dict[str, str] = {}
         self._counts: dict[str, int] = {}
 
@@ -161,88 +231,47 @@ class CrawlDriver:
 
     # -- one round -----------------------------------------------------------
 
+    def _fixture(self, df: DataFrame) -> DataFrame:
+        return F.broadcast(df) if self.config.broadcast_fixture_tables else df
+
     def _run_round(self, round_no: int) -> bool:
         cfg = self.config
         lineage: list = []
         candidates = self._read_state("candidates", CANDIDATE_SCHEMA)
-        frontier = self._read_state("frontier", FRONTIER_SCHEMA)
-        url_seen = self._read_state("url_seen", SEEN_SCHEMA)
-        robots_cache = self._read_state("robots_cache", ROBOTS_CACHE_SCHEMA)
 
         # committed counts from driver_state — no recount jobs
         n_candidates = max(self._counts.get("candidates", 0), 0)
         n_frontier = max(self._counts.get("frontier", 0), 0)
-        n_seen_prev = max(self._counts.get("url_seen", 0), 0)
-        n_robots_prev = max(self._counts.get("robots_cache", 0), 0)
-        n_schedule_prev = max(self._counts.get("schedule", 0), 0)
         if n_candidates == 0 and n_frontier == 0:
             return False
 
-        # 1. admission (D1/D2): canon + batch dedup + bloom-pruned anti-join
+        # 1-4. admit, robots, gate, schedule (D1-D5, D9)
         bloom = (self._read_state("url_seen_bloom", None)
                  if cfg.use_bloom and "url_seen_bloom" in self._snapshots
                  else None)
-        admitted = admit_candidates(candidates, url_seen, bloom_table=bloom,
-                                    bloom_shards=cfg.seen_buckets).cache()
-
-        # 2. robots for new hosts (S1-S4) + sitemap expansion (D6)
-        new_hosts = (admitted.select("host_key").distinct()
-                     .join(robots_cache.select("host_key"), "host_key",
-                           "left_anti"))
-        docs = (F.broadcast(self.robots_docs) if cfg.broadcast_fixture_tables
-                else self.robots_docs)
-        robots_new = (new_hosts.join(docs, "host_key", "left")
-                      .withColumn("access_state",
-                                  F.coalesce("access_state",
-                                             F.lit("unavailable")))
-                      .withColumn("__r", self._compile_udf(
-                          F.col("access_state"), F.col("body")))
-                      .select("host_key", "access_state",
-                              F.col("__r.user_agent").alias("user_agent"),
-                              F.col("__r.always").alias("always"),
-                              F.col("__r.rules").alias("rules"),
-                              F.col("__r.crawl_delay").alias("crawl_delay"),
-                              F.col("__r.sitemaps").alias("sitemaps"))
-                      ).cache()
-        robots_cache = robots_cache.unionByName(robots_new)
-
+        plan = plan_round(
+            candidates, self._read_state("url_seen", SEEN_SCHEMA),
+            self._fixture(self.robots_docs),
+            robots_cache=self._read_state("robots_cache",
+                                          ROBOTS_CACHE_SCHEMA),
+            frontier=self._read_state("frontier", FRONTIER_SCHEMA),
+            bloom=bloom, round_no=round_no, user_agent=cfg.user_agent,
+            round_seconds=cfg.round_seconds, default_delay=cfg.default_delay)
+        # the commits, the fetch and link discovery all read the schedule
+        schedule = lifecycle.track(plan.schedule)
         sitemap_cand = expand_sitemaps_df(
-            robots_new,
-            F.broadcast(self.sitemap_docs) if cfg.broadcast_fixture_tables
-            else self.sitemap_docs,
+            plan.robots_new, self._fixture(self.sitemap_docs)
         ).select("url", "priority")
-
-        # 3. gate the newly admitted entries (D5)
-        gate = (gate_allowed_relational if cfg.relational_gate
-                else gate_allowed)
-        gated = gate(admitted.join(
-            robots_cache.select("host_key", "always", "rules"),
-            "host_key", "left"))
-        allowed = gated.where(F.col("allowed")).select(
-            "url_canon", "host_key", "match_path", "priority")
-
-        pending = frontier.unionByName(allowed).persist()
-
-        # 4. schedule (D3/D4/D9)
-        delays = robots_cache.select("host_key", "crawl_delay")
-        with_delay = pending.join(delays, "host_key", "left")
-        selected = politeness_schedule(with_delay, cfg.round_seconds,
-                                       cfg.default_delay, cfg.salt_buckets,
-                                       skew_threshold=cfg.skew_threshold)
-        schedule_rows = sequence_schedule(selected).select(
-            F.lit(round_no).alias("round"), F.col("seq"),
-            "url_canon", "host_key", "priority").cache()
 
         # 5. fetch + verify (D7)
         fetch_log = fetch_and_verify(
-            schedule_rows, self.images,
+            schedule, self.images,
             broadcast_images=cfg.broadcast_fixture_tables)
 
         # 6. discovered links -> next candidates
-        links = (F.broadcast(self.links) if cfg.broadcast_fixture_tables
-                 else self.links)
-        link_cand = (schedule_rows
-                     .join(links, schedule_rows.url_canon == links.src_url)
+        links = self._fixture(self.links)
+        link_cand = (schedule
+                     .join(links, schedule.url_canon == links.src_url)
                      .select(F.col("dst_url").alias("url"),
                              F.lit(PRIORITY_LINK).alias("priority")))
         next_candidates = sitemap_cand.unionByName(link_cand)
@@ -280,9 +309,9 @@ class CrawlDriver:
             lineage.append((round_no, name, snaps[name], counts[name]))
             return n
 
-        # wave 0: the schedule commit alone — it materializes the cached
-        # schedule_rows/pending/admitted chain every other commit reads
-        n_scheduled = commit("schedule", schedule_rows, delta=True)
+        # wave 0: the schedule commit alone — it materializes the pinned
+        # schedule/pending/admitted chain every other commit reads
+        n_scheduled = commit("schedule", schedule, delta=True)
 
         # wave 1: the remaining per-round table commits are mutually
         # independent Spark jobs over warm caches; submit them from
@@ -290,11 +319,11 @@ class CrawlDriver:
         # adding up — this fixed cost, not compute, dominated small rounds
         wave1 = [
             ("url_seen", dict(df=bucketed_by_url(
-                admitted.select("url_canon"), cfg.seen_buckets),
+                plan.admitted.select("url_canon"), SEEN_BUCKETS),
                 delta=True)),
-            ("robots_cache", dict(df=robots_new, delta=True)),
-            ("frontier", dict(df=pending.join(
-                schedule_rows.select("url_canon"), "url_canon",
+            ("robots_cache", dict(df=plan.robots_new, delta=True)),
+            ("frontier", dict(df=plan.pending.join(
+                schedule.select("url_canon"), "url_canon",
                 "left_anti"))),
             ("candidates", dict(df=next_candidates)),
             ("fetch_log", dict(df=fetch_log.select(
@@ -327,14 +356,13 @@ class CrawlDriver:
             if prev_snap and counts["url_seen"] <= prev_cap:
                 bloom_df = merge_bloom(
                     self.store.read("url_seen_bloom", prev_snap),
-                    admitted.select("url_canon"), prev_cap,
-                    shards=cfg.seen_buckets)
+                    plan.admitted.select("url_canon"), prev_cap)
                 cap = prev_cap
             else:
                 cap = max(2 * counts["url_seen"], 1 << 14)
                 bloom_df = build_bloom(
                     self.store.read("url_seen", snaps["url_seen"]),
-                    shards=cfg.seen_buckets, capacity=cap)
+                    capacity=cap)
             commit("url_seen_bloom", bloom_df, meta={"capacity": cap})
         fetched = extra_metrics["fetch_log"]
         metrics_row = [(round_no, n_candidates, n_admitted, n_denied,
@@ -350,12 +378,8 @@ class CrawlDriver:
                delta=True)
         self._write_driver_state(round_no + 1, snaps, counts)
 
-        admitted.unpersist()
-        pending.unpersist()
-        robots_new.unpersist()
-        schedule_rows.unpersist()
-        # caches operators registered on the shared lifecycle this round
-        # (global_sequence's ranked partials) die with the round too
+        # every cache the round pinned — plan_round's and the operators'
+        # (global_sequence's ranked partials) — dies with the round
         lifecycle.release()
         return bool(n_scheduled or n_admitted or counts["candidates"])
 

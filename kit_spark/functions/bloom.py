@@ -1,7 +1,8 @@
 """Partitioned Bloom filter for the URL-seen fast path (D2).
 
-North-rule requirement: "bloom/cuckoo URL-seen ... hashed into a partitioned
-Bloom filter persisted as Iceberg tables".  Design:
+North-rule requirement: a URL-seen set "hashed into a partitioned Bloom
+filter persisted as Iceberg tables".  The crawl never expires a seen URL, so
+an insert-only filter is enough.  Design:
 
 * The seen-set is hashed into P independent Bloom shards; a URL's shard is
   ``hash64(url) % P``.  Shards are built in parallel with one

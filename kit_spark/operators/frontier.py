@@ -28,7 +28,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window as W, functions as F
 
 
-
 def admit_candidates(candidates: DataFrame, url_seen: DataFrame | None,
                      url_col: str = "url", priority_col: str = "priority",
                      bloom_table: DataFrame | None = None,
@@ -67,8 +66,7 @@ def admit_candidates(candidates: DataFrame, url_seen: DataFrame | None,
 
 def politeness_schedule(pending: DataFrame, round_seconds: float,
                         default_delay: float, salt_buckets: int = 8,
-                        skew_threshold: int = 500_000,
-                        skewed_hosts: list | DataFrame | None = None) -> DataFrame:
+                        skew_threshold: int = 500_000) -> DataFrame:
     """D3+D4: exact per-host top-`budget` selection by (-priority, url_canon).
 
     Expects columns: url_canon, host_key, priority, crawl_delay (nullable,
@@ -89,13 +87,11 @@ def politeness_schedule(pending: DataFrame, round_seconds: float,
     10^10-row design point up to ~20k hosts can exceed the threshold; a
     literal list would bloat the plan and add a driver round-trip every
     round).  It is bounded by total_rows/skew_threshold rows, so the
-    broadcast is always tiny.  ``skewed_hosts`` callers with a known host
-    histogram can pass a list ([] short-circuits to the single-window plan)
-    or a (host_key) DataFrame.
+    broadcast is always tiny.
 
     ``pending`` is scanned up to three times (detection, normal side,
-    heavy side) — pass a persisted DataFrame or a table read; the crawl
-    driver persists the round's pending set (crawl.py), and at cluster
+    heavy side) — pass a persisted DataFrame or a table read;
+    ``crawl.plan_round`` persists the round's pending set, and at cluster
     scale pending is the frontier snapshot table, so re-scans are pruned
     parquet reads, not recomputation.
     """
@@ -113,18 +109,11 @@ def politeness_schedule(pending: DataFrame, round_seconds: float,
                 .where(F.col("host_rank") <= F.col("host_budget"))
                 .drop("host_budget"))
 
-    if isinstance(skewed_hosts, list):
-        if not skewed_hosts:  # caller asserts no skew: single-window plan
-            return exact_rank(with_budget)
-        heavy_hosts = pending.sparkSession.createDataFrame(
-            [(h,) for h in skewed_hosts], "host_key string")
-    elif skewed_hosts is not None:  # caller-provided host DataFrame
-        heavy_hosts = skewed_hosts.select("host_key")
-    else:  # detect as dataflow: map-side-combined count per host
-        heavy_hosts = (pending.groupBy("host_key")
-                       .agg(F.count("*").alias("__n"))
-                       .where(F.col("__n") > skew_threshold)
-                       .select("host_key"))
+    # detect as dataflow: map-side-combined count per host
+    heavy_hosts = (pending.groupBy("host_key")
+                   .agg(F.count("*").alias("__n"))
+                   .where(F.col("__n") > skew_threshold)
+                   .select("host_key"))
 
     normal = with_budget.join(F.broadcast(heavy_hosts), "host_key",
                               "left_anti")

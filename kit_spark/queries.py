@@ -1521,13 +1521,10 @@ def frontier_round(spark, sf_dir):
     the same CTE chain symbolically (canon -> anti-join -> hand-encoded
     gate for the fixed ruleset -> budget top-k -> global sequence); full
     multi-round parity vs the oracle crawler is pytest's
-    tests/test_crawl_e2e.py."""
+    tests/test_crawl_e2e.py.  The round is the crawl's own composition
+    (crawl.plan_round), fed one robots.txt shared by all 13 hosts."""
+    from kit_spark.crawl import plan_round
     from kit_spark.functions.canon import with_canon
-    from kit_spark.functions.robots_udfs import (gate_allowed_relational,
-                                                 make_compile_udf)
-    from kit_spark.operators.frontier import (admit_candidates,
-                                              politeness_schedule as sched,
-                                              sequence_schedule)
 
     urls = _messy_urls(spark, sf_dir)
     # (A one-canon-pass variant — cache the canon output, derive seen and
@@ -1536,26 +1533,15 @@ def frontier_round(spark, sf_dir):
     # caching the full canon output of every candidate.)
     seen = (with_canon(urls.where(F.col("doc_id") % 17 == 0), "url")
             .select("url_canon").distinct())
-    admitted = _persist(admit_candidates(urls, seen))  # scanned by the
-    # host-distinct branch and the gate join — the driver caches it too;
-    # released when the next catalog entry is built
-    hosts = admitted.select("host_key").distinct() \
-        .withColumn("access_state", F.lit("successful")) \
-        .withColumn("body", F.lit(_GATE_ROBOTS))
-    compiled = hosts.withColumn(
-        "__r", make_compile_udf("kitbot", True)(F.col("access_state"),
-                                                F.col("body"))) \
-        .select("host_key", F.col("__r.always").alias("always"),
-                F.col("__r.rules").alias("rules"),
-                F.col("__r.crawl_delay").alias("crawl_delay"))
-    gated = gate_allowed_relational(admitted.join(compiled, "host_key"))
-    pending = _persist(gated.where(F.col("allowed")).select(
-        "url_canon", "host_key", "priority", "crawl_delay"))
-    # politeness scans pending up to 3x; the crawl driver persists the
-    # round's pending set the same way (crawl.py)
-    selected = sched(pending, round_seconds=60.0, default_delay=10.0)
-    return sequence_schedule(selected).select("seq", "url_canon", "host_key",
-                                              "priority")
+    robots_docs = spark.createDataFrame(
+        [(f"https://h{i}.example.com:443", "successful", _GATE_ROBOTS)
+         for i in range(13)],
+        "host_key string, access_state string, body binary")
+    # plan_round pins its round on the entry lifecycle: released when the
+    # next catalog entry is built
+    plan = plan_round(urls, seen, robots_docs, round_seconds=60.0,
+                      default_delay=10.0)
+    return plan.schedule.select("seq", "url_canon", "host_key", "priority")
 
 
 @query("sitemap_recrawl_due", oracle="""

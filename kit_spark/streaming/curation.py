@@ -271,17 +271,20 @@ def run_streaming_curation(doc_stream: DataFrame, store,
     # with Spark's batch-id sequence, so a lost/re-pointed checkpoint
     # (whose ids restart at 0) presents a NEW identity and the
     # exactly-once skip can fail fast instead of silently dropping
-    # batches (see _curate_batch)
+    # batches (see _curate_batch).  O_EXCL makes the create atomic: of
+    # two runs starting on one fresh dir, the loser adopts the winner's id
     import uuid
 
     os.makedirs(checkpoint_dir, exist_ok=True)
     ident = os.path.join(checkpoint_dir, "kit_run_id")
-    if os.path.exists(ident):
+    try:
+        fd = os.open(ident, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
+    except FileExistsError:
         with open(ident) as fh:
             run_id = fh.read().strip()
     else:
         run_id = uuid.uuid4().hex
-        with open(ident, "w") as fh:
+        with os.fdopen(fd, "w") as fh:
             fh.write(run_id)
 
     def process(batch_df: DataFrame, epoch_id: int) -> None:

@@ -150,3 +150,41 @@ def test_partial_commit_crash_recovery(spark, spark_inputs, e2e_web, oracle,
     assert schedule_key(d2.schedule_df()) == oracle_key(oracle)
     seen = {r["url_canon"] for r in d2.table("url_seen").collect()}
     assert seen == oracle.url_seen
+
+
+def test_run_releases_round_caches(spark, spark_inputs, e2e_web, tmp_path):
+    """Runtime twin of test_plans' bare-persist grep for the crawl: every
+    cache a round pins (plan_round's frames, global_sequence's partials)
+    is released when the round ends.  Compares RDD id sets, as
+    test_entry_caches_fully_release does."""
+    from kit_spark import lifecycle
+
+    sc = spark.sparkContext
+
+    def rdd_ids():
+        return set(sc._jsc.getPersistentRDDs().keySet().toArray())
+
+    lifecycle.release()  # drop anything earlier tests left tracked
+    base_ids = rdd_ids()
+    driver = make_driver(spark, spark_inputs, tmp_path / "rel", max_rounds=1)
+    driver.run(e2e_web.seeds)
+    leaked = rdd_ids() - base_ids
+    assert not leaked, f"{len(leaked)} cached DataFrames outlived the run"
+
+
+def test_degenerate_seeds_commit_one_empty_round(spark, spark_inputs,
+                                                 e2e_web, tmp_path):
+    """Seeds that never canonicalize — null, unparseable, non-http —
+    admit nothing: the driver commits one empty round, then stops, and
+    like the oracle counts no productive round."""
+    seeds = [None, "", "not a url", "http://", "http://[::1",
+             "ftp://h0.test/a.png", "mailto:bot@h0.test",
+             "javascript:void(0)"]
+    driver = make_driver(spark, spark_inputs, tmp_path / "junk")
+    out = driver.run(seeds)
+    want = crawl(seeds, e2e_web.web, CrawlConfig(round_seconds=ROUND_SECONDS))
+    assert out == {"rounds": want.rounds} == {"rounds": 0}
+    metrics = driver.table("metrics").collect()
+    assert [(m["round"], m["admitted"], m["scheduled"]) for m in metrics] \
+        == [(0, 0, 0)]
+    assert driver.schedule_df().count() == 0

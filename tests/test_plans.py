@@ -151,18 +151,22 @@ def test_clean_corpus_cluster_plan_shape(spark):
 
 
 def test_no_bare_persist_in_catalog_entries():
-    # Every cache a catalog entry pins must go through _persist(...) so
-    # release_entry_persists() can drop it when the next entry is built
-    # (kit_spark/lifecycle.py).  A bare .persist()/.cache() escapes that
-    # lifecycle and leaks one cached DataFrame per catalog run.
+    # Every cache a catalog entry or a crawl round pins must go through
+    # the lifecycle (kit_spark/lifecycle.py), so one release drops it when
+    # the next entry is built or the round ends.  A bare .persist()/
+    # .cache() escapes that lifecycle and leaks one cached DataFrame per
+    # catalog run or crawl round.
     import inspect
     import re
 
+    import kit_spark.crawl as C
     import kit_spark.queries as Q
 
-    src = inspect.getsource(Q)
-    bare = re.findall(r"^.*\.(?:persist|cache)\(\).*$", src, re.M)
-    assert not bare, f"bare persist/cache outside lifecycle: {bare}"
+    for mod in (Q, C):
+        src = inspect.getsource(mod)
+        bare = re.findall(r"^.*\.(?:persist|cache)\(\).*$", src, re.M)
+        assert not bare, (f"bare persist/cache outside lifecycle in "
+                          f"{mod.__name__}: {bare}")
 
 
 def test_entry_caches_fully_release(spark):

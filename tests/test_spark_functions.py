@@ -203,28 +203,6 @@ def test_read_robots_dir_binaryfile(spark, tmp_path):
     assert rows[0]["body_bytes"] == len(rows[0]["body"])
 
 
-def test_cuckoo_no_false_negatives_and_delete_capable(spark):
-    from kit_spark.functions.cuckoo import build_cuckoo, cuckoo_might_contain
-
-    seen = spark.createDataFrame(
-        [(f"https://h{i % 5}.test/c{i}",) for i in range(3000)],
-        "url_canon string")
-    table = build_cuckoo(seen, shards=4).cache()
-    rows = table.collect()
-    assert len(rows) == 4
-    assert all(r["n_failed"] == 0 for r in rows), "sizing must avoid drops"
-    cand = spark.createDataFrame(
-        [(f"https://h{i % 5}.test/c{i}",) for i in range(2000, 4000)],
-        "url_canon string")
-    probed = cuckoo_might_contain(cand, table, shards=4).cache()
-    false_neg = probed.join(seen, "url_canon").where(~F.col("might_be_seen")) \
-        .count()
-    assert false_neg == 0
-    fp = probed.join(seen, "url_canon", "left_anti") \
-        .where(F.col("might_be_seen")).count()
-    assert fp < 40  # 16-bit fingerprints, 4 slots -> fp rate ~2^-13*8
-
-
 def test_production_minhash_xxhash64_finds_planted_dups(spark):
     """The xxhash64 production minhash (functions/dedup.py) and the md5_long
     oracle twin must find the same planted near-duplicates; the exact

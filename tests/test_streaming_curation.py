@@ -257,3 +257,25 @@ def test_checkpoint_identity_mismatch_fails_fast(spark, tmp_path, held_out):
     assert "d13" in got
     # identity-less callers (legacy/direct) keep the old epoch-only skip
     _curate_batch(d1, 0, store, held_out, CFG)
+
+
+def test_run_identity_create_keeps_the_race_winner(spark, tmp_path,
+                                                   monkeypatch):
+    """Two runs starting on one fresh checkpoint dir race to create its
+    run identity; the loser must adopt the id already on disk, never
+    overwrite it.  Losing the race is simulated: the file exists, but the
+    existence check still reports it missing."""
+    import os
+
+    ckpt, docs = tmp_path / "ckpt", tmp_path / "docs"
+    ckpt.mkdir()
+    docs.mkdir()
+    ident = ckpt / "kit_run_id"
+    ident.write_text("winner")
+    exists = os.path.exists
+    monkeypatch.setattr(os.path, "exists",
+                        lambda p: str(p) != str(ident) and exists(p))
+    run_streaming_curation(stream_documents(spark, str(docs)),
+                           SnapshotStore(spark, str(tmp_path / "store")),
+                           str(ckpt))
+    assert ident.read_text() == "winner"
