@@ -8,7 +8,7 @@ The job is one full crawl round at fixed input size (strong scaling):
 distributed synthesis of n messy URLs, then the crawl's own round
 composition (crawl.plan_round: canonicalize UDF (D1) -> batch dedup +
 anti-join vs a 10%-sized seen set (D2) -> robots compile and gate with a
-mixed rule/always cache (D5) -> salted politeness top-k (D3/D4) ->
+mixed rule/always cache (D5) -> bounded-window politeness top-k (D3/D4) ->
 deterministic global sequence (D9)), then a simulated fetch with the per-row
 image invariant (D7: synthesize, encode, decode, PSNR + caption check —
 the north rule's verification is part of the engine's hot loop).  The

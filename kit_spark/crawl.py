@@ -18,8 +18,8 @@ only in their inputs and sinks.  The driver adds steps 5-6 and the commits:
 3. gate new frontier entries (D5: host-key join + zero-Python first match);
    robots never change mid-crawl, so gating once at admission is
    equivalent to the oracle's per-round re-gate
-4. politeness + priority schedule (D3/D4 two-phase salted top-k) and the
-   deterministic global sequence (D9)
+4. politeness + priority schedule (D3/D4: one host window bounded by the
+   round's largest budget) and the deterministic global sequence (D9)
 5. simulated fetch against the image table + per-row invariant (D7)
 6. discovered links -> next-round candidates
 
@@ -131,7 +131,7 @@ def plan_round(candidates: DataFrame, url_seen: DataFrame,
         "host_key", "left"))
     allowed = gated.where(F.col("allowed")).select(
         "url_canon", "host_key", "match_path", "priority")
-    # politeness scans pending up to three times
+    # politeness scans pending twice
     pending = lifecycle.track(
         allowed if frontier is None else frontier.unionByName(allowed))
 

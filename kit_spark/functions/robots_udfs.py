@@ -74,9 +74,10 @@ ROBOTS_CACHE_SCHEMA = T.StructType([
 ])
 
 
-def make_compile_udf(user_agent: str, optimal: bool = True):
+def make_compile_udf(user_agent: str):
     """Compile UDF bound to the engine's (constant) user agent — UA group
-    selection happens at parse time exactly as in the reference (P10)."""
+    selection happens at parse time exactly as in the reference (P10),
+    with the reference's ``optimal`` global-rule collapse always on."""
 
     @F.pandas_udf(ROBOTS_STRUCT)
     def compile_robots(access: pd.Series, body: pd.Series) -> pd.DataFrame:
@@ -86,7 +87,7 @@ def make_compile_udf(user_agent: str, optimal: bool = True):
             if isinstance(data, str):
                 data = data.encode("utf-8")
             robots = Robots.from_access(acc or "unavailable", data,
-                                        user_agent, optimal=optimal)
+                                        user_agent)
             out["user_agent"].append(robots.user_agent)
             out["always"].append(robots.always)
             out["rules"].append([

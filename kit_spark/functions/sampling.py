@@ -13,9 +13,10 @@ and eval splits silently drift):
 * ``hash_sample`` — a p-fraction subsample by hash threshold: the same
   mechanism, one split.
 * ``per_group_cap`` — at most k rows per group (per source / domain /
-  language), the RefinedWeb/C4-style dominance cap, with the same
-  skew split as the politeness scheduler: mega-groups take a salted
-  two-phase top-k so no single window partition sees the whole group.
+  language), the RefinedWeb/C4-style dominance cap, as the same bounded
+  window as the politeness scheduler: a literal ``row_number() <= k``
+  that Spark splits into a Partial limit below the group Exchange, so no
+  map task ships more than k rows of a mega-group.
 * ``mix_corpus`` — downsample each source to hit target mixture
   proportions (The Pile / DoReMi-style domain reweighting without
   upsampling): the largest output satisfying every weighted source's
@@ -103,52 +104,24 @@ def hash_sample(df: DataFrame, rate: float, id_col: str = "doc_id",
 
 
 def per_group_cap(df: DataFrame, group_col: str, order_cols: list,
-                  k: int, salt_buckets: int = 8,
-                  skew_threshold: int = 500_000,
-                  salt_col: str | None = None,
-                  rank_col: str = "group_rank") -> DataFrame:
+                  k: int, rank_col: str = "group_rank") -> DataFrame:
     """Keep the top-``k`` rows of every group under a total order — the
     per-source dominance cap (no single domain/source may flood the
     corpus).  ``order_cols`` must define a TOTAL order (include a unique
     tiebreaker) or the selection is nondeterministic.
 
-    Skew shape mirrors ``operators.frontier.politeness_schedule``:
-    groups are split by a map-side-combined count into normal (single
-    row_number window) and heavy (> ``skew_threshold`` rows: pre-top-k
-    within (group, salt) shards — a superset of the group top-k — then
-    the exact window over the <= salt_buckets * k survivors).  The heavy
-    set rides broadcast semi/anti joins; no driver collect, no IN
-    literal.  Selection is path-independent, so results never depend on
-    the threshold.
-
-    ``salt_col`` names a column to shard mega-groups by (e.g. the id);
-    the default shards by the row's current partition.  ANY shard
-    assignment yields the same final selection — per-salt top-k is a
-    superset of the group top-k — so the salt choice affects balance,
-    never the answer.
+    One ``row_number`` window filtered on the literal ``k``, the shape of
+    ``operators.frontier.politeness_schedule``: Spark's WindowGroupLimit
+    plans a Partial limit below the group Exchange and a Final one above
+    it, so a mega-group reaches its window task as at most k rows per map
+    partition.  Spark plans the limit only while k <= ``spark.sql.
+    optimizer.windowGroupLimitThreshold`` (default 1000); above it the
+    plan is the plain window, which is still exact.
     """
     order = [c if isinstance(c, Column) else F.col(c) for c in order_cols]
     w_group = W.partitionBy(group_col).orderBy(*order)
-
-    def exact_rank(part: DataFrame) -> DataFrame:
-        return (part.withColumn(rank_col, F.row_number().over(w_group))
-                .where(F.col(rank_col) <= k))
-
-    heavy_groups = (df.groupBy(group_col)
-                    .agg(F.count("*").alias("__n"))
-                    .where(F.col("__n") > skew_threshold)
-                    .select(group_col))
-    normal = df.join(F.broadcast(heavy_groups), group_col, "left_anti")
-    heavy = df.join(F.broadcast(heavy_groups), group_col, "left_semi")
-    w_salt = W.partitionBy(group_col, "__salt").orderBy(*order)
-    salt = (F.xxhash64(F.col(salt_col).cast("string"))
-            if salt_col else F.spark_partition_id())
-    survivors = (heavy.withColumn(
-        "__salt", F.pmod(salt, F.lit(salt_buckets)))
-        .withColumn("__sr", F.row_number().over(w_salt))
-        .where(F.col("__sr") <= k)
-        .drop("__salt", "__sr"))
-    return exact_rank(normal).unionByName(exact_rank(survivors))
+    return (df.withColumn(rank_col, F.row_number().over(w_group))
+            .where(F.col(rank_col) <= k))
 
 
 def source_mix_rates(df: DataFrame, weights: dict,

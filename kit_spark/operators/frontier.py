@@ -10,12 +10,13 @@ cluster; sandbox tests only shrink the data, not the plan shape):
   ``xxhash64(url_canon)`` so the anti-join co-locates (see
   sources/tables.py).  A Bloom prefilter (functions/bloom.py) prunes the
   anti-join probe side; exactness always comes from the anti-join.
-* Politeness is a per-host top-k.  A naive window over ``host_key`` puts a
-  mega-host (10^8 URLs, Zipf head) in one task; we use the standard
-  two-phase exact top-k: rank within (host, salt) — S-way parallel —
-  keep local rank <= budget, then re-rank the <= S*budget survivors per
-  host.  Result is exactly the global per-host top-budget by the total
-  order (-priority, url_canon).
+* Politeness is a per-host top-k: one ``row_number`` window over
+  ``host_key`` bounded by a literal ``L`` (the round's largest budget).
+  Spark's WindowGroupLimit (SPARK-37099) then plans a Partial limit below
+  the host Exchange, so no map task ships more than L rows of any host —
+  a mega-host (10^8 URLs, Zipf head) reaches its window task as at most
+  L rows per map partition.  Result is exactly the per-host top-budget by
+  the total order (-priority, url_canon).
 * The round's global sequence avoids a single-partition window over the
   data: range repartition on the order key, local row_number per
   partition, plus per-partition offsets computed as a dataflow running
@@ -65,68 +66,45 @@ def admit_candidates(candidates: DataFrame, url_seen: DataFrame | None,
 
 
 def politeness_schedule(pending: DataFrame, round_seconds: float,
-                        default_delay: float, salt_buckets: int = 8,
-                        skew_threshold: int = 500_000) -> DataFrame:
+                        default_delay: float) -> DataFrame:
     """D3+D4: exact per-host top-`budget` selection by (-priority, url_canon).
 
     Expects columns: url_canon, host_key, priority, crawl_delay (nullable,
     from the robots cache).  Returns the selected rows with ``host_rank``.
-    budget = max(1, floor(round_seconds / delay)) — delay <= 0 or null
-    falls back to default_delay (oracle contract).
+    budget = max(1, round_seconds // delay) with Python's float floor
+    division, computed as ``round((rs - rs % delay) / delay)`` — a plain
+    ``floor(rs / delay)`` schedules 600 URLs for ``Crawl-delay: 0.1`` where
+    the oracle crawler schedules 599.  delay <= 0 or null falls back to
+    default_delay (oracle contract).
 
-    Skew handling is adaptive (the AQE-skew-join idea applied to windows,
-    which AQE itself cannot split): hosts whose pending count exceeds
-    ``skew_threshold`` take the salted two-phase top-k (rank within
-    (host, salt), then exact rank over the <= S*budget survivors); everyone
-    else takes a single host window.  Selection is identical either way —
-    per-salt top-budget is a superset of the host top-budget — so the
-    result never depends on which path a host took.
+    One host window, filtered on ``host_rank <= L AND host_rank <=
+    host_budget``, where the literal ``L`` is the largest budget in the
+    input (one global ``max`` aggregate, run when the operator is called:
+    no host shuffle, no broadcast).  The literal bound lets Spark plan a
+    Partial ``WindowGroupLimit`` below the host Exchange and a Final one
+    above it, so every host — not only a detected heavy one — ships at
+    most L rows per map task, and the selection stays exact when the
+    budget varies within a host.  Spark
+    plans the limit only while L <= ``spark.sql.optimizer.
+    windowGroupLimitThreshold`` (default 1000); above it the plan is the
+    plain window, which is still exact.
 
-    The heavy-host set stays a *DataFrame* split via broadcast semi/anti
-    joins — no driver ``collect()``, no ``IN`` literal in the plan (at the
-    10^10-row design point up to ~20k hosts can exceed the threshold; a
-    literal list would bloat the plan and add a driver round-trip every
-    round).  It is bounded by total_rows/skew_threshold rows, so the
-    broadcast is always tiny.
-
-    ``pending`` is scanned up to three times (detection, normal side,
-    heavy side) — pass a persisted DataFrame or a table read;
-    ``crawl.plan_round`` persists the round's pending set, and at cluster
-    scale pending is the frontier snapshot table, so re-scans are pruned
-    parquet reads, not recomputation.
+    ``pending`` is scanned twice (the max aggregate and the window) — pass
+    a persisted DataFrame or a table read; ``crawl.plan_round`` persists
+    the round's pending set.
     """
     delay = F.when(F.col("crawl_delay").isNull() | (F.col("crawl_delay") <= 0),
                    F.lit(default_delay)).otherwise(F.col("crawl_delay"))
-    with_budget = pending.withColumn(
-        "host_budget",
-        F.greatest(F.lit(1), F.floor(F.lit(round_seconds) / delay)))
+    rs = F.lit(float(round_seconds))
+    budget = F.greatest(F.lit(1),
+                        F.round((rs - rs % delay) / delay).cast("long"))
+    limit = pending.select(F.max(budget)).first()[0] or 1
 
-    order = [F.col("priority").desc(), F.col("url_canon").asc()]
-    w_host = W.partitionBy("host_key").orderBy(*order)
-
-    def exact_rank(df: DataFrame) -> DataFrame:
-        return (df.withColumn("host_rank", F.row_number().over(w_host))
-                .where(F.col("host_rank") <= F.col("host_budget"))
-                .drop("host_budget"))
-
-    # detect as dataflow: map-side-combined count per host
-    heavy_hosts = (pending.groupBy("host_key")
-                   .agg(F.count("*").alias("__n"))
-                   .where(F.col("__n") > skew_threshold)
-                   .select("host_key"))
-
-    normal = with_budget.join(F.broadcast(heavy_hosts), "host_key",
-                              "left_anti")
-    heavy = with_budget.join(F.broadcast(heavy_hosts), "host_key",
-                             "left_semi")
-    # phase A on the mega-hosts: S-way parallel pre-top-k within (host, salt)
-    w_salt = W.partitionBy("host_key", "salt").orderBy(*order)
-    survivors = (heavy.withColumn(
-        "salt", F.pmod(F.xxhash64("url_canon"), F.lit(salt_buckets)))
-        .withColumn("salt_rank", F.row_number().over(w_salt))
-        .where(F.col("salt_rank") <= F.col("host_budget"))
-        .drop("salt", "salt_rank"))
-    return exact_rank(normal).unionByName(exact_rank(survivors))
+    w_host = W.partitionBy("host_key").orderBy(F.col("priority").desc(),
+                                               F.col("url_canon").asc())
+    return (pending.withColumn("host_rank", F.row_number().over(w_host))
+            .where((F.col("host_rank") <= limit)
+                   & (F.col("host_rank") <= budget)))
 
 
 def global_sequence(df: DataFrame, order_cols: list, seq_col: str = "seq",

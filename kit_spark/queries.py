@@ -577,7 +577,8 @@ SELECT CAST(row_number() OVER (ORDER BY priority DESC, host_key, url_canon) - 1
 FROM kept
 """))
 def politeness_schedule(spark, sf_dir):
-    """D3+D4+D9: the engine's salted two-phase top-k + scalable global
+    """D3+D4+D9: the engine's bounded host window (a Partial
+    WindowGroupLimit below the host Exchange) + scalable global
     sequencing vs a plain-window oracle."""
     from kit_spark.functions.canon import with_canon
     from kit_spark.operators.frontier import (politeness_schedule as sched,
@@ -588,12 +589,11 @@ def politeness_schedule(spark, sf_dir):
         "url_canon", "host_key", "priority",
         (5.0 * ((F.col("doc_id") % 13) % 4 + 1)).cast("double")
         .alias("crawl_delay"))
-    frontier = _persist(frontier)  # the operator scans pending up
-    # to 3x (skew detect + normal/heavy sides) — its contract is a
+    frontier = _persist(frontier)  # the operator scans pending
+    # twice (max-budget aggregate + host window) — its contract is a
     # persisted input, exactly as the crawl driver provides (crawl.py);
     # released when the next catalog entry is built
-    selected = sched(frontier, round_seconds=60.0, default_delay=10.0,
-                     salt_buckets=4)
+    selected = sched(frontier, round_seconds=60.0, default_delay=10.0)
     return sequence_schedule(selected).select("seq", "url_canon", "host_key",
                                               "host_rank")
 
@@ -633,8 +633,8 @@ def robots_gate(spark, sf_dir):
         .withColumn("access_state", F.lit("successful")) \
         .withColumn("body", F.lit(_GATE_ROBOTS))
     compiled = hosts.withColumn(
-        "__r", make_compile_udf("kitbot", True)(F.col("access_state"),
-                                                F.col("body"))) \
+        "__r", make_compile_udf("kitbot")(F.col("access_state"),
+                                          F.col("body"))) \
         .select("host_key", F.col("__r.always").alias("always"),
                 F.col("__r.rules").alias("rules"))
     gated = gate_allowed(canon.join(compiled, "host_key"))
@@ -669,8 +669,8 @@ def robots_gate_relational(spark, sf_dir):
         .withColumn("access_state", F.lit("successful")) \
         .withColumn("body", F.lit(_GATE_ROBOTS))
     compiled = hosts.withColumn(
-        "__r", make_compile_udf("kitbot", True)(F.col("access_state"),
-                                                F.col("body"))) \
+        "__r", make_compile_udf("kitbot")(F.col("access_state"),
+                                          F.col("body"))) \
         .select("host_key", F.col("__r.always").alias("always"),
                 F.col("__r.rules").alias("rules"))
     gated = gate_allowed_relational(canon.join(compiled, "host_key"))

@@ -42,13 +42,37 @@ def test_q1_stays_jvm_side(spark):
         plans.codegen_stage_count(q) >= 0
 
 
-def test_politeness_skew_split_is_dataflow(spark):
-    # round-2 invariant: skew detection is a broadcast semi/anti split —
-    # no driver collect, no IN-literal list of host strings in the plan
-    q = QUERIES["politeness_schedule"](spark, SF)
-    plan = plans.formatted_plan(q)
-    assert "host_key IN" not in plan and " INSET " not in plan, plan[:2000]
-    plans.assert_no_cartesian(q)
+def _bounded_window_chains(df, key):
+    """(final, partial) arguments of every WindowGroupLimit -> Sort ->
+    Exchange(hash on ``key``) -> WindowGroupLimit chain in the plan tree."""
+    import re
+
+    plan = plans.formatted_plan(df)
+    args = dict(re.findall(r"^\((\d+)\) [A-Za-z ]+\n(?:.+\n)*?"
+                           r"Arguments: (.*)$", plan, re.M))
+    chains = re.findall(r"WindowGroupLimit \((\d+)\)\n.*Sort \(\d+\)\n"
+                        r".*Exchange \((\d+)\)\n.*WindowGroupLimit \((\d+)\)",
+                        plan)
+    return [(args[final], args[partial]) for final, exchange, partial in chains
+            if args[exchange].startswith(f"hashpartitioning({key}#")]
+
+
+def test_per_host_topk_plans_bounded_window(spark):
+    # politeness and the per-source cap are one literal-bounded window:
+    # a Partial WindowGroupLimit below the group Exchange caps what each
+    # map task ships per group, and a Final one above it — no skew split
+    from kit_spark.functions.sampling import per_group_cap
+
+    docs = load(spark, SF, "documents")
+    for df, key in ((QUERIES["politeness_schedule"](spark, SF), "host_key"),
+                    (per_group_cap(docs, "source", ["doc_id"], 3), "source")):
+        plans.assert_no_cartesian(df)
+        chains = _bounded_window_chains(df, key)
+        assert chains, plans.formatted_plan(df)[:3000]
+        for final, partial in chains:
+            assert final.endswith(", Final"), final
+            assert partial.endswith(", Partial"), partial
+            assert final.startswith(f"[{key}#"), final
 
 
 def test_dedup_pipeline_is_pure_catalyst(spark):

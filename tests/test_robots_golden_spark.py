@@ -22,8 +22,8 @@ def run_gate(spark, docs, candidates, user_agent, relational=False):
     docs_df = spark.createDataFrame(docs, "host_key string, body binary") \
         .withColumn("access_state", F.lit("successful"))
     compiled = docs_df.withColumn(
-        "__r", make_compile_udf(user_agent, True)(F.col("access_state"),
-                                                  F.col("body"))) \
+        "__r", make_compile_udf(user_agent)(F.col("access_state"),
+                                            F.col("body"))) \
         .select("host_key", F.col("__r.always").alias("always"),
                 F.col("__r.rules").alias("rules"))
     if relational:

@@ -66,45 +66,58 @@ def test_hash_split_rejects_bad_weights(docs):
             hash_split(docs, bad)
 
 
-def test_per_group_cap_matches_duckdb_both_paths(spark, docs):
-    """skew_threshold=10 forces the big sources down the salted two-phase
-    path and leaves small ones on the single window — the result must be
-    identical to a plain ranked selection either way."""
+WGL_THRESHOLD = "spark.sql.optimizer.windowGroupLimitThreshold"
+
+
+def _capped(spark, docs, k, threshold):
+    """``per_group_cap`` rows and physical plan under one WindowGroupLimit
+    threshold: 0 keeps the plain window, a threshold >= k plans the
+    Partial/Final bounded window."""
     from pyspark.sql import functions as F
 
-    k = 5
-    out = per_group_cap(docs, "source",
-                        [F.col("n_chars").desc(), F.col("doc_id")], k,
-                        skew_threshold=10, salt_col="doc_id")
-    got = {(r["source"], r["doc_id"], r["group_rank"])
-           for r in out.collect()}
+    old = spark.conf.get(WGL_THRESHOLD)
+    spark.conf.set(WGL_THRESHOLD, str(threshold))
+    try:
+        out = per_group_cap(docs, "source",
+                            [F.col("n_chars").desc(), F.col("doc_id")], k)
+        return out.collect(), plans.formatted_plan(out)
+    finally:
+        spark.conf.set(WGL_THRESHOLD, old)
 
+
+def test_per_group_cap_matches_duckdb_both_paths(spark, docs):
+    """Both plans Spark may pick — the plain window (threshold 0) and the
+    bounded WindowGroupLimit window (threshold >= k) — keep exactly a
+    plain ranked selection's top-k per source."""
+    k = 5
     con = duckdb.connect()
     con.execute(f"CREATE VIEW documents AS SELECT * FROM "
                 f"read_parquet('{SF}/documents.parquet')")
     expect = set(con.execute(f"""
         SELECT source, doc_id, rn FROM (
-          SELECT source, doc_id, row_number() OVER (
-                   PARTITION BY source
+          SELECT source, doc_id, row_number() OVER (PARTITION BY source
                    ORDER BY n_chars DESC, doc_id) AS rn
           FROM documents) WHERE rn <= {k}""").fetchall())
-    assert got == expect
-    # both paths actually ran: some source exceeded 10 docs, some didn't
+    for threshold, bounded in ((0, False), (1000, True)):
+        rows, plan = _capped(spark, docs, k, threshold)
+        assert ("WindowGroupLimit" in plan) == bounded, plan[:3000]
+        got = {(r["source"], r["doc_id"], r["group_rank"]) for r in rows}
+        assert got == expect, threshold
+    # the cap binds: some source has more than k docs
     sizes = dict(con.execute(
         "SELECT source, count(*) FROM documents GROUP BY source").fetchall())
-    assert max(sizes.values()) > 10 and min(sizes.values()) <= 5 * k
+    assert max(sizes.values()) > k
 
 
-def test_per_group_cap_normal_path_only(docs):
-    from pyspark.sql import functions as F
+def test_per_group_cap_normal_path_only(spark, docs):
+    """The plain window alone (no WindowGroupLimit planned) still caps
+    every source at k."""
+    from collections import Counter
 
-    out = per_group_cap(docs, "source",
-                        [F.col("n_chars").desc(), F.col("doc_id")], 3,
-                        skew_threshold=1_000_000)
-    per_src = {r["source"]: r["cnt"] for r in
-               out.groupBy("source").count()
-               .withColumnRenamed("count", "cnt").collect()}
-    assert all(v <= 3 for v in per_src.values())
+    rows, plan = _capped(spark, docs, 3, 0)
+    assert "WindowGroupLimit" not in plan, plan[:3000]
+    per_src = Counter(r["source"] for r in rows)
+    assert per_src and all(v <= 3 for v in per_src.values())
 
 
 def test_split_and_sample_plans_are_scan_narrow(docs):

@@ -62,7 +62,7 @@ ROBOTS_DOCS = [
 def robots_cache_df(spark):
     df = spark.createDataFrame(
         [Row(host_key=h, access_state=a, body=b) for h, a, b in ROBOTS_DOCS])
-    compile_udf = make_compile_udf("kitbot", True)
+    compile_udf = make_compile_udf("kitbot")
     return (df.withColumn("__r", compile_udf(F.col("access_state"), F.col("body")))
             .select("host_key", "access_state", "__r.*").cache())
 
@@ -146,31 +146,56 @@ def test_admit_candidates_dedup_and_seen(spark):
     assert got == {"https://a.com/x": 0.9}  # max-priority dedup + seen drop
 
 
-import pytest as _pytest
+def _delay_budget(delay, round_seconds=60.0, default_delay=10.0):
+    if delay is None or delay <= 0:
+        delay = default_delay
+    return max(1, int(round_seconds // delay))  # the oracle crawler's rule
 
 
-@_pytest.mark.parametrize("skew_threshold", [0, 500_000])
-def test_politeness_exact_topk(spark, skew_threshold):
-    rows = []
-    for host, n, delay in (("https://big.test:443", 40, 1.0),
-                           ("https://slow.test:443", 10, 30.0)):
-        for i in range(n):
-            rows.append((f"{host[8:-4]}/p{i:03d}", host,
-                         float(i % 5) / 10 + 0.1, delay))
+@pytest.mark.parametrize("group_limit_threshold", [0, 500_000])
+def test_politeness_exact_topk(spark, group_limit_threshold):
+    """Per-host top-budget against brute force, on both plans Spark may
+    pick: ``spark.sql.optimizer.windowGroupLimitThreshold`` 0 keeps the
+    plain host window, 500000 (>= the literal limit 599) plans the
+    Partial/Final WindowGroupLimit.  ``fast`` (Crawl-delay 0.1:
+    60 // 0.1 == 599, where floor(60 / 0.1) == 600) bounds the window's
+    literal limit; ``mixed`` carries a different delay per row, so each row
+    is kept iff its host rank fits its own budget; the input is spread over
+    3 partitions so every host's rows meet in the host Exchange."""
+    mixed_delays = (5.0, 20.0, 0.0, None)
+    hosts = (("https://big.test:443", 40, lambda i: 1.0),
+             ("https://slow.test:443", 10, lambda i: 30.0),
+             ("https://fast.test:443", 700, lambda i: 0.1),
+             ("https://mixed.test:443", 30, lambda i: mixed_delays[i % 4]))
+    rows = [(f"{host[8:-4]}/p{i:03d}", host, float(i % 5) / 10 + 0.1,
+             delay(i)) for host, n, delay in hosts for i in range(n)]
     df = spark.createDataFrame(
-        rows, "url_canon string, host_key string, priority double, crawl_delay double")
-    out = politeness_schedule(df, round_seconds=60.0, default_delay=10.0,
-                              salt_buckets=4, skew_threshold=skew_threshold)
-    got = {h: sorted((r["priority"], r["url_canon"]) for r in rs)
-           for h, rs in _group(out.collect(), "host_key").items()}
-    # brute-force expectation
-    for host, n, delay in (("https://big.test:443", 40, 1.0),
-                           ("https://slow.test:443", 10, 30.0)):
-        budget = max(1, int(60.0 // delay))
-        items = sorted(((f"{host[8:-4]}/p{i:03d}", float(i % 5) / 10 + 0.1)
-                        for i in range(n)), key=lambda t: (-t[1], t[0]))
-        expect = sorted((p, u) for u, p in items[:budget])
+        rows, "url_canon string, host_key string, priority double, "
+              "crawl_delay double").repartition(3)
+    assert df.rdd.getNumPartitions() == 3
+    from kit_spark import plans
+
+    conf = "spark.sql.optimizer.windowGroupLimitThreshold"
+    old = spark.conf.get(conf)
+    spark.conf.set(conf, str(group_limit_threshold))
+    try:
+        out = politeness_schedule(df, round_seconds=60.0, default_delay=10.0)
+        plan = plans.physical_plan(out)
+        collected = out.collect()
+    finally:
+        spark.conf.set(conf, old)
+    assert ("WindowGroupLimit" in plan) == (group_limit_threshold >= 599), plan
+    got = {h: sorted((r["host_rank"], r["url_canon"]) for r in rs)
+           for h, rs in _group(collected, "host_key").items()}
+    # brute-force expectation: rank by (-priority, url_canon) within the
+    # host, keep the rows whose rank fits their own budget
+    for host in {r[1] for r in rows}:
+        items = sorted((r for r in rows if r[1] == host),
+                       key=lambda r: (-r[2], r[0]))
+        expect = [(rank, r[0]) for rank, r in enumerate(items, 1)
+                  if rank <= _delay_budget(r[3])]
         assert got[host] == expect, host
+    assert len(got["https://fast.test:443"]) == 599
 
 
 def _group(rows, key):
