@@ -53,7 +53,8 @@ def state_chain(workdir: str) -> list:
 
 def load_state(spark, workdir: str, name: str):
     """A state table (band_index / corpus_all) as of ``workdir``: the
-    union of its chain's delta directories.  Re-ingest semantics: a
+    union of its chain's delta directories: every doc that reached
+    near-dup, shipped or dropped.  Re-ingest semantics: a
     doc_id re-ingested in the CURRENT batch supersedes its prior rows
     (the probe anti-joins them; the verify's batch-wins union drops the
     stale text).  A doc_id re-ingested with *different text* across two
@@ -90,16 +91,17 @@ def main(argv: list | None = None) -> dict:
                         help="dedup this batch against a PRIOR run's "
                              "persisted LSH band index instead of batch-"
                              "only: loads the prior chain's band_index/"
-                             "corpus_all deltas (state_chain.json), "
-                             "probes only the new batch's bands (dedup "
-                             "cost tracks batch size, not corpus size), "
-                             "and appends this batch's delta + manifest "
-                             "so runs chain with O(batch) state IO.  "
-                             "Prior docs are already shipped, so "
-                             "only batch docs drop; equals a one-shot "
-                             "run over prior+batch whenever prior "
-                             "doc_ids order before the batch's "
-                             "(ingestion-ordered ids)")
+                             "corpus_all deltas (state_chain.json: "
+                             "every doc that reached near-dup, shipped "
+                             "or dropped), probes only the new batch's "
+                             "bands (dedup cost tracks batch size, not "
+                             "corpus size), and appends this batch's "
+                             "delta + manifest so runs chain with "
+                             "O(batch) state IO.  Only batch docs drop; "
+                             "equals a one-shot run over prior+batch "
+                             "whenever prior doc_ids order before the "
+                             "batch's (ingestion-ordered ids), else the "
+                             "first arrival is kept")
     parser.add_argument("--decontam-n", type=int, default=13)
     parser.add_argument("--max-per-source", type=int, default=0,
                         help="dominance cap; 0 disables")
@@ -159,42 +161,18 @@ def main(argv: list | None = None) -> dict:
                         <= args.max_top2gram_frac))
               .drop("dup_line_frac", "dup_line_char_frac",
                     "top2gram_char_frac"))
-    # the gated corpus is consumed by three dataflows (near-dup pair
-    # build, the anti-join, the split) — persist via the shared lifecycle
+    # the gated corpus is consumed by four dataflows (near-dup pair
+    # build, its corpus_all delta, the anti-join, the split) — persist
+    # via the shared lifecycle
     corpus = lifecycle.track(corpus)
     counts["after_clean_gates"] = corpus.count()
 
-    sig = DD.minhash_signatures(corpus, k=8, n=3)
+    state = None
     if args.incremental:
-        # incremental near-dup (functions/dedup.lsh_incremental_pairs):
-        # the shipped corpus's bands stay put in the prior run's index,
-        # only this batch is banded, and the candidate set covers
-        # new-vs-prior AND new-vs-new pairs.  The Jaccard verify needs
-        # prior docs' TEXT too — corpus_all is the chain's cumulative
-        # (doc_id, text) table, written by every run.
-        prior_index = load_state(spark, args.incremental, "band_index")
-        prior_corpus_all = load_state(spark, args.incremental, "corpus_all")
-        # pairs is consumed twice below (the id set and the verify joins):
-        # persist it so deriving the candidate ids does not re-probe
-        pairs = lifecycle.track(DD.lsh_incremental_pairs(
-            sig, prior_index, k=8, rows_per_band=2))
-        # batch text wins over a stale prior copy on re-ingest, mirroring
-        # lsh_incremental_pairs's own stale-row drop
-        texts = corpus.select("doc_id", "text").unionByName(
-            prior_corpus_all.select("doc_id", "text")
-            .join(corpus.select("doc_id"), "doc_id", "left_anti"))
-        # restrict_to_pairs keeps the verify O(batch): candidates are
-        # batch-bounded by construction, so the shingle explode must touch
-        # only candidate docs, never the whole cumulative corpus
-        verified = DD.ngram_jaccard_pairs(texts, pairs, n=3,
-                                          restrict_to_pairs=True)
-    else:
-        pairs = DD.lsh_candidate_pairs(sig, k=8, rows_per_band=2)
-        verified = DD.ngram_jaccard_pairs(corpus, pairs, n=3)
-    dup_pairs = (verified.where(F.col("jaccard") >= args.jaccard)
-                 .select("a", "b"))
-    losers = dedup_cluster_losers(dup_pairs)  # (doc_id) rows to drop
-    corpus = corpus.join(losers, "doc_id", "left_anti")
+        state = (load_state(spark, args.incremental, "band_index"),
+                 load_state(spark, args.incremental, "corpus_all"))
+    near = DD.plan_near_dup(corpus, state=state, jaccard=args.jaccard)
+    corpus = corpus.join(near.losers, "doc_id", "left_anti")
     counts["after_near_dup"] = corpus.count()
 
     if args.mix:
@@ -220,21 +198,13 @@ def main(argv: list | None = None) -> dict:
     counts["train_final"] = train.count()
 
     split.write.mode("overwrite").parquet(f"{args.workdir}/corpus")
-    # persist the dedup state so the NEXT batch can run --incremental
-    # against this workdir: band_index covers every shipped doc's LSH
-    # bands (at cluster scale: bucketed by (band, val) — the probe side
-    # co-locates), corpus_all the chain's cumulative (doc_id, text) for
-    # the Jaccard verify.  O(batch) IO: this run writes ONLY its own
-    # batch's rows as a new delta directory and records the prior chain
-    # in state_chain.json — the prior runs' parquet is never rewritten
-    # (the pre-round-6 layout rewrote prior∪new per run, O(corpus) IO
-    # per batch; see state_chain/load_state for the read side and the
-    # re-ingest supersede semantics).
-    shipped = split.select("doc_id")
-    bands = DD.lsh_band_index(sig).join(shipped, "doc_id", "left_semi")
-    texts_all = split.select("doc_id", "text")
-    bands.write.mode("overwrite").parquet(f"{args.workdir}/band_index")
-    texts_all.write.mode("overwrite").parquet(f"{args.workdir}/corpus_all")
+    # the dedup state the NEXT --incremental run reads: plan_near_dup's
+    # delta (bands + texts of every doc that reached near-dup).  O(batch)
+    # IO: only this batch's rows go in a new delta directory, and
+    # state_chain.json records the chain; prior runs' parquet is never
+    # rewritten (read side: state_chain/load_state)
+    near.bands.write.mode("overwrite").parquet(f"{args.workdir}/band_index")
+    near.texts.write.mode("overwrite").parquet(f"{args.workdir}/corpus_all")
     chain = (state_chain(args.incremental) if args.incremental else []) \
         + [os.path.abspath(args.workdir)]
     with open(f"{args.workdir}/state_chain.json", "w") as fh:

@@ -13,14 +13,20 @@ Four families, all expressed shuffle-consciously:
 * **n-gram Jaccard** — exact verification on *candidate pairs only*
   (token-level inverted-index join), the standard verify stage after LSH.
 
+:func:`plan_near_dup` composes minhash -> LSH -> Jaccard -> cluster
+losers once, for the curation job, the curation stream and the catalog.
+
 At 100 TB the only all-to-all operations are groupBys on
 normalized-text/band/token keys — never a cross join.
 """
 
 from __future__ import annotations
 
+from typing import NamedTuple
+
 from pyspark.sql import DataFrame, Window as W, functions as F
 
+from . import components
 from .text import norm_text
 
 # --- exact -------------------------------------------------------------------
@@ -470,16 +476,12 @@ def ngram_jaccard_pairs(docs: DataFrame, pairs: DataFrame,
     string-keyed default stays bit-exact and is the DuckDB oracle twin.
 
     ``restrict_to_pairs=True`` semi-joins ``docs`` to the ids occurring in
-    ``pairs`` BEFORE anything is shingled.  The result is identical (a
-    doc's shingle set does not depend on other docs, and only pair
-    members ever reach the output), but the shingle explode + distinct —
-    the verify stage's dominant cost — now touches only candidate docs.
-    This is what makes the INCREMENTAL near-dup paths O(batch): their
-    candidate set is batch-bounded by construction while ``docs`` is the
-    batch UNION the cumulative corpus, so without the restriction every
-    batch re-shingles the whole corpus.  Callers pass an already-persisted
-    ``pairs`` (both jobs lifecycle-track it) so deriving the id set does
-    not recompute the LSH probe.
+    ``pairs`` BEFORE anything is shingled: the result is identical, but
+    the shingle explode + distinct — the verify's dominant cost — touches
+    only candidate docs.  That keeps :func:`plan_near_dup`'s incremental
+    verify O(batch), where ``docs`` is the batch UNION the cumulative
+    corpus.  Pass an already-persisted ``pairs`` so deriving the id set
+    does not recompute the LSH probe.
     """
     if restrict_to_pairs:
         ids = (pairs.select(F.col("a").alias(id_col))
@@ -504,3 +506,72 @@ def ngram_jaccard_pairs(docs: DataFrame, pairs: DataFrame,
                     F.round(F.col("n_common") /
                             (F.col("na") + F.col("nb") - F.col("n_common")), 4)
                     .alias("jaccard")))
+
+
+# --- the near-dup composition ------------------------------------------------
+
+
+class NearDupPlan(NamedTuple):
+    """:func:`plan_near_dup`'s result: the batch docs to drop, and the
+    state delta of every doc passed in."""
+    losers: DataFrame  # (doc_id)
+    bands: DataFrame   # (doc_id, band, val)
+    texts: DataFrame   # (doc_id, text)
+
+
+def plan_near_dup(docs: DataFrame, *,
+                  state: tuple[DataFrame, DataFrame] | None = None,
+                  k: int = 8, n: int = 3, rows_per_band: int = 2,
+                  max_bucket: int | None = None, jaccard: float = 0.8,
+                  method: str = "xxhash64") -> NearDupPlan:
+    """Near-dup removal for a batch of ``docs`` (doc_id, text): minhash ->
+    LSH -> n-gram Jaccard verify at ``jaccard`` -> connected components.
+
+    ``state`` is the ``(bands, texts)`` of every doc seen before (earlier
+    calls' deltas).  Against it only the batch is banded and probed, and
+    the verify reads the batch over ``texts`` (the batch wins a
+    re-ingested doc_id), restricted to candidates: cost tracks the batch.
+
+    One loser rule: a batch doc loses iff its component over the verified
+    edges holds a ``state`` doc, or it is not its component's min id.
+    For ascending-id batches that equals a one-shot run over their union;
+    otherwise the first arrival keeps its place.  With ``state=None`` it
+    is ``components.dedup_cluster_losers``.  The delta covers dropped
+    docs too, so a later near-dup of a dropped doc still drops.
+    """
+    from kit_spark import lifecycle
+
+    sig = lifecycle.track(minhash_signatures(docs, k=k, n=n, method=method))
+    texts = docs.select("doc_id", "text")
+    if state is None:
+        pairs = lsh_candidate_pairs(sig, k=k, rows_per_band=rows_per_band,
+                                    max_bucket=max_bucket)
+        verified = ngram_jaccard_pairs(texts, pairs, n=n)
+    else:
+        state_bands, state_texts = state
+        pairs = lifecycle.track(lsh_incremental_pairs(
+            sig, state_bands, k=k, rows_per_band=rows_per_band,
+            max_bucket=max_bucket))
+        seen = state_texts.join(texts.select("doc_id"), "doc_id", "left_anti")
+        verified = ngram_jaccard_pairs(texts.unionByName(seen), pairs, n=n,
+                                       restrict_to_pairs=True)
+    dup = verified.where(F.col("jaccard") >= jaccard).select("a", "b")
+    if state is None:
+        losers = components.dedup_cluster_losers(dup)
+    else:
+        # node key (in batch, doc_id): state docs order first, so a
+        # component holding one elects it and all its batch docs lose
+        def mark(end):
+            return docs.select(F.col("doc_id").alias(end),
+                               F.lit(True).alias(f"__{end}"))
+
+        def key(end):
+            return F.struct(F.col(f"__{end}").isNotNull().alias("batch"),
+                            F.col(end).alias("id")).alias(end)
+
+        dup = (dup.join(mark("a"), "a", "left").join(mark("b"), "b", "left")
+               .select(key("a"), key("b")))
+        losers = (components.dedup_cluster_losers(dup)
+                  .where("doc_id.batch")
+                  .select(F.col("doc_id.id").alias("doc_id")))
+    return NearDupPlan(losers, lsh_band_index(sig, k, rows_per_band), texts)

@@ -1387,7 +1387,7 @@ def docs_clean_corpus_cluster(spark, sf_dir):
     scale operators and oracle-checked end to end:
 
     * near-dup graph: minhash -> LSH buckets -> exact-Jaccard verify
-      (identical construction to docs_clean_corpus, >=0.8 edges),
+      (``plan_near_dup``, as in the curation job and stream; >=0.8 edges),
     * **cluster dedup**: connected components over the pair graph
       (alternating large-star/small-star, functions/components.py) keep
       exactly one representative (min doc_id) per component — chains
@@ -1402,7 +1402,6 @@ def docs_clean_corpus_cluster(spark, sf_dir):
     The DuckDB oracle replays every stage, including the transitive
     closure (recursive CTE — fine at oracle scale; the Spark side runs
     the O(log^2 n)-round star contraction that survives 10^10 edges)."""
-    from kit_spark.functions.components import dedup_cluster_losers
     from kit_spark.functions.decontam import contaminated_doc_ids
 
     # one cache for the corpus/bench split's many consumers (verify,
@@ -1410,17 +1409,14 @@ def docs_clean_corpus_cluster(spark, sf_dir):
     # re-derive from it): round-6 5-variant A/B made THIS the whole win
     # (9.3 -> 4.9 s; candidate-restricting the verify or pinning pairs
     # added time on top at this scale — the restricted verify lives in
-    # the incremental call sites, where it is the O(batch) contract).
+    # the incremental path, where it is the O(batch) contract).
     # The pin plays the role a frontier-table read plays in the crawl
     # driver: at cluster scale these consumers re-read a pruned table
     docs = _persist(load(spark, sf_dir, "documents", spread=True))
     corpus = docs.where(F.col("doc_id") >= _CORPUS_WHERE)
     bench = docs.where(F.col("doc_id") < _CORPUS_WHERE).select("text")
-    sig = DD.minhash_signatures(corpus, k=_MINHASH_K, n=3, method="md5_long")
-    pairs = DD.lsh_candidate_pairs(sig, k=_MINHASH_K, rows_per_band=2)
-    verified = DD.ngram_jaccard_pairs(corpus, pairs, n=3)
-    dup = verified.where(F.col("jaccard") >= 0.8).select("a", "b")
-    losers = dedup_cluster_losers(dup)
+    losers = DD.plan_near_dup(corpus, k=_MINHASH_K, n=3,
+                              method="md5_long").losers
     contaminated = contaminated_doc_ids(corpus, bench, n=5)
     scored = corpus.select(
         "doc_id",

@@ -24,6 +24,8 @@ def get_spark(app_name: str = "kit_spark", cores: int | None = None,
         cores = int(os.environ.get("SPARK_GRAFT_CPUS", "0")) or os.cpu_count() or 4
     if shuffle_partitions is None:
         shuffle_partitions = max(cores, 4)
+    # a quarter of physical memory, capped at 12g: a second session fits
+    phys_mb = os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE") >> 20
     builder = (
         SparkSession.builder.master(f"local[{cores}]")
         .appName(app_name)
@@ -44,7 +46,8 @@ def get_spark(app_name: str = "kit_spark", cores: int | None = None,
         # (KIT_SPARK_ARROW_BATCH) so batches stay within executor memory
         .config("spark.sql.execution.arrow.maxRecordsPerBatch",
                 os.environ.get("KIT_SPARK_ARROW_BATCH", "8192"))
-        .config("spark.driver.memory", os.environ.get("KIT_SPARK_DRIVER_MEM", "12g"))
+        .config("spark.driver.memory", os.environ.get(
+            "KIT_SPARK_DRIVER_MEM", f"{min(phys_mb // 4, 12 << 10)}m"))
         # local-mode shuffle medium: tmpfs when available (a cluster would
         # use NVMe + network; spinning /tmp serializes shuffle-heavy stages)
         .config("spark.local.dir",

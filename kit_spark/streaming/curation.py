@@ -9,10 +9,9 @@ curated as it is crawled instead of in one giant batch:
 * cross-document paragraph dedup against the persisted ``para_index``
   key table (functions.dedup.paragraph_dedup_incremental) — a paragraph
   seen in ANY earlier batch is boilerplate here;
-* MinHash/LSH near-dup against the persisted ``band_index``
-  (functions.dedup.lsh_incremental_pairs) with n-gram Jaccard verify
-  against the cumulative ``corpus_all`` text table — cost tracks the
-  batch, never the corpus;
+* MinHash/LSH near-dup against the persisted ``band_index`` with n-gram
+  Jaccard verify against the cumulative ``corpus_all`` text table
+  (functions.dedup.plan_near_dup) — cost tracks the batch, never the corpus;
 * benchmark decontamination against a static held-out frame;
 * survivors append to the ``curated`` table.
 
@@ -29,13 +28,14 @@ skipped.  This is the same torn-commit recovery the crawl driver's
 driver_state table implements (kit_spark/crawl.py), applied to the
 curation state.
 
-Near-dup index semantics: ``band_index``/``corpus_all`` cover every doc
-SEEN (shipped or dropped), not just shipped docs — so a later near-dup
-of a dropped doc is dropped too, matching the one-shot pipeline's
-connected-component election for transitive duplicate groups (the
-one-shot twin is jobs/curate_job.py's clean->dedup->decontam chain;
-equivalence for ascending-id, transitive-duplicate batches is pinned in
-tests/test_streaming_curation.py).
+Near-dup semantics (functions.dedup.plan_near_dup's one loser rule):
+``band_index``/``corpus_all`` cover every doc SEEN (shipped or dropped),
+and a batch doc drops iff its component over the verified edges holds a
+seen doc, or it is not its component's min id.  For ascending-id batches
+that equals the one-shot pipeline over their union (jobs/curate_job.py's
+clean->dedup->decontam chain; pinned in tests/test_streaming_curation.py
+and tests/test_near_dup_arrival_order.py); otherwise the first arrival
+keeps its place, as in paragraph dedup.
 """
 
 from __future__ import annotations
@@ -48,7 +48,6 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from .. import lifecycle
 from ..functions import dedup as DD
 from ..functions.cleaning import c4_line_filter, redact_pii
-from ..functions.components import dedup_cluster_losers
 from ..functions.decontam import decontaminate
 
 
@@ -161,61 +160,20 @@ def _curate_batch_inner(batch: DataFrame, epoch_id: int, store,
     if para_index is not None:
         new_keys = new_keys.join(para_index, "para_key", "left_anti")
     # the post-paragraph corpus feeds four dataflows (signatures, the
-    # Jaccard verify, the corpus_all append, the curated append) and the
-    # signatures feed two (candidate pairs, the band-index append):
-    # pin both for the batch, released in _curate_batch's finally
+    # Jaccard verify, the corpus_all append, the curated append): pin it
+    # for the batch, released in _curate_batch's finally
     docs = lifecycle.track(
         paras.join(batch.select("doc_id", "source"), "doc_id")
         .select("doc_id", "source", F.col("text_dedup").alias("text")))
 
     # -- incremental near-dup: batch vs the seen corpus --------------------
-    sig = lifecycle.track(
-        DD.minhash_signatures(docs, k=cfg.k, n=cfg.minhash_n))
     band_index = pinned("band_index")
-    corpus_all = pinned("corpus_all")
-    if band_index is None:
-        pairs = DD.lsh_candidate_pairs(sig, k=cfg.k,
-                                       rows_per_band=cfg.rows_per_band,
-                                       max_bucket=cfg.max_bucket)
-        texts = docs.select("doc_id", "text")
-        restrict = False
-    else:
-        # pairs feeds the candidate-id set AND the verify joins: pin it so
-        # the id derivation does not re-run the index probe (released with
-        # the batch's lifecycle unit)
-        pairs = lifecycle.track(DD.lsh_incremental_pairs(
-            sig, band_index, k=cfg.k, rows_per_band=cfg.rows_per_band,
-            max_bucket=cfg.max_bucket))
-        texts = docs.select("doc_id", "text").unionByName(
-            corpus_all.join(docs.select("doc_id"), "doc_id", "left_anti"))
-        # O(batch) contract: candidates are batch-bounded, so the verify
-        # must shingle only candidate docs — never the cumulative corpus
-        restrict = True
-    verified = DD.ngram_jaccard_pairs(texts, pairs, n=cfg.minhash_n,
-                                      restrict_to_pairs=restrict)
-    dup = (verified.where(F.col("jaccard") >= cfg.jaccard)
-           .select("a", "b"))
-    # a new doc near-dup of ANY seen doc loses (first sighting shipped or
-    # was itself judged); among new-new pairs, the component's min-id
-    # representative ships — together the arrival-order form of the
-    # one-shot connected-component election
-    new_ids = docs.select("doc_id")
-    flagged = (dup
-               .join(new_ids.select(F.col("doc_id").alias("a"),
-                                    F.lit(True).alias("__an")), "a", "left")
-               .join(new_ids.select(F.col("doc_id").alias("b"),
-                                    F.lit(True).alias("__bn")), "b", "left"))
-    cross_losers = (flagged
-                    .where(F.col("__an").isNull() | F.col("__bn").isNull())
-                    .select(F.when(F.col("__an").isNull(), F.col("b"))
-                            .otherwise(F.col("a")).alias("doc_id")))
-    both_new = (flagged.where(F.col("__an").isNotNull()
-                              & F.col("__bn").isNotNull())
-                .select("a", "b"))
-    losers = cross_losers.unionByName(
-        dedup_cluster_losers(both_new)).distinct()
-    shipped = docs.join(losers, "doc_id", "left_anti")
-    n_dup_dropped = losers.count()
+    state = None if band_index is None else (band_index, pinned("corpus_all"))
+    near = DD.plan_near_dup(docs, state=state, k=cfg.k, n=cfg.minhash_n,
+                            rows_per_band=cfg.rows_per_band,
+                            max_bucket=cfg.max_bucket, jaccard=cfg.jaccard)
+    shipped = docs.join(near.losers, "doc_id", "left_anti")
+    n_dup_dropped = near.losers.count()
 
     # -- decontamination (static held-out benchmark) -----------------------
     if benchmark is not None:
@@ -232,12 +190,10 @@ def _curate_batch_inner(batch: DataFrame, epoch_id: int, store,
         "para_index": store.append("para_index", new_keys,
                                    meta=emeta, parent=pins.get("para_index")),
         # the index records SEEN docs (shipped or dropped) — see module doc
-        "band_index": store.append(
-            "band_index",
-            DD.lsh_band_index(sig, k=cfg.k, rows_per_band=cfg.rows_per_band),
-            meta=emeta, parent=pins.get("band_index")),
-        "corpus_all": store.append("corpus_all", docs.select("doc_id", "text"),
-                                   meta=emeta, parent=pins.get("corpus_all")),
+        "band_index": store.append("band_index", near.bands, meta=emeta,
+                                   parent=pins.get("band_index")),
+        "corpus_all": store.append("corpus_all", near.texts, meta=emeta,
+                                   parent=pins.get("corpus_all")),
         "curated": store.append("curated", shipped,
                                 meta=emeta, parent=pins.get("curated")),
     }
@@ -271,21 +227,24 @@ def run_streaming_curation(doc_stream: DataFrame, store,
     # with Spark's batch-id sequence, so a lost/re-pointed checkpoint
     # (whose ids restart at 0) presents a NEW identity and the
     # exactly-once skip can fail fast instead of silently dropping
-    # batches (see _curate_batch).  O_EXCL makes the create atomic: of
-    # two runs starting on one fresh dir, the loser adopts the winner's id
+    # batches (see _curate_batch).  os.link publishes a fully written
+    # temp file, so the identity is never seen empty, and fails if the
+    # name exists: of two runs on one fresh dir, the loser adopts the id
     import uuid
 
     os.makedirs(checkpoint_dir, exist_ok=True)
     ident = os.path.join(checkpoint_dir, "kit_run_id")
+    run_id = uuid.uuid4().hex
+    tmp = f"{ident}.{run_id}.tmp"
+    with open(tmp, "w") as fh:
+        fh.write(run_id)
     try:
-        fd = os.open(ident, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
+        os.link(tmp, ident)
     except FileExistsError:
         with open(ident) as fh:
             run_id = fh.read().strip()
-    else:
-        run_id = uuid.uuid4().hex
-        with os.fdopen(fd, "w") as fh:
-            fh.write(run_id)
+    finally:
+        os.unlink(tmp)
 
     def process(batch_df: DataFrame, epoch_id: int) -> None:
         _curate_batch(batch_df, epoch_id, store, benchmark, cfg,

@@ -279,3 +279,42 @@ def test_run_identity_create_keeps_the_race_winner(spark, tmp_path,
                            SnapshotStore(spark, str(tmp_path / "store")),
                            str(ckpt))
     assert ident.read_text() == "winner"
+
+
+def test_run_identity_is_published_whole(spark, tmp_path, monkeypatch):
+    """A racing run reads the identity at any point of the winner's
+    create.  Before and after every filesystem call the winner makes,
+    ``kit_run_id`` must be absent or hold the full id: never empty, so a
+    loser can never adopt a blank identity."""
+    import os
+
+    ckpt, docs = tmp_path / "ckpt", tmp_path / "docs"
+    docs.mkdir()
+    ident = ckpt / "kit_run_id"
+    stream = stream_documents(spark, str(docs))
+    store = SnapshotStore(spark, str(tmp_path / "store"))
+    seen = []
+
+    def snap():
+        seen.append(ident.read_text() if ident.exists() else None)
+
+    def watch(name):
+        real = getattr(os, name)
+
+        def call(*args, **kwargs):
+            snap()
+            try:
+                return real(*args, **kwargs)
+            finally:
+                snap()
+        monkeypatch.setattr(os, name, call)
+
+    for name in ("open", "fdopen", "link", "rename", "replace", "unlink"):
+        watch(name)
+    run_streaming_curation(stream, store, str(ckpt))
+    monkeypatch.undo()
+    run_id = ident.read_text()
+    assert len(run_id) == 32
+    assert seen and set(seen) <= {None, run_id}
+    # the temp file the id was published from is gone
+    assert sorted(p.name for p in ckpt.iterdir()) == ["kit_run_id"]
