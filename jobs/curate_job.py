@@ -22,7 +22,11 @@ image+caption table, decode-verify every row, drop phash near-duplicate
 clusters (min-id representative kept), and assign byte-balanced output
 shards.  Writes the curated corpus, the block map, and the image
 shard map under --workdir and prints one JSON summary of per-stage
-counts.  ``python jobs/curate_job.py`` works too (local session).
+counts.  With --state-dir, both dedup stages run against the state the
+earlier runs committed there, and the run commits its own deltas as
+the next epoch (kit_spark.streaming.curation's protocol, shared with
+jobs/stream_curate_job.py).  ``python jobs/curate_job.py`` works too
+(local session).
 
 Every stage is the Spark-shaped operator documented in its module — no
 driver-side loops; the job is a thin composition.
@@ -34,36 +38,9 @@ import argparse
 import json
 import os
 import sys
+import uuid
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-
-
-def state_chain(workdir: str) -> list:
-    """The ordered workdir chain whose band_index/corpus_all deltas form
-    this run's dedup state.  Each --incremental run appends ONLY its own
-    batch's rows (O(batch) IO, never a rewrite of the prior corpus) plus
-    this manifest; a workdir without a manifest is a pre-chain layout
-    (one full directory) and is its own chain."""
-    manifest = os.path.join(workdir, "state_chain.json")
-    if os.path.exists(manifest):
-        with open(manifest) as fh:
-            return json.load(fh)["chain"]
-    return [workdir]
-
-
-def load_state(spark, workdir: str, name: str):
-    """A state table (band_index / corpus_all) as of ``workdir``: the
-    union of its chain's delta directories: every doc that reached
-    near-dup, shipped or dropped.  Re-ingest semantics: a
-    doc_id re-ingested in the CURRENT batch supersedes its prior rows
-    (the probe anti-joins them; the verify's batch-wins union drops the
-    stale text).  A doc_id re-ingested with *different text* across two
-    prior runs of one chain leaves both delta rows — stale bands only add
-    candidates the verify then rejects, so pairs stay correct, but chains
-    should keep batches disjoint on doc_id for exact Jaccard on such
-    docs (the same precondition the streaming pipeline documents)."""
-    return spark.read.parquet(
-        *[os.path.join(d, name) for d in state_chain(workdir)])
 
 
 def main(argv: list | None = None) -> dict:
@@ -87,21 +64,22 @@ def main(argv: list | None = None) -> dict:
                         help="Gopher top-2-gram character-fraction gate; "
                              "1.0 disables")
     parser.add_argument("--jaccard", type=float, default=0.8)
-    parser.add_argument("--incremental", default=None, metavar="PRIOR_WORKDIR",
-                        help="dedup this batch against a PRIOR run's "
-                             "persisted LSH band index instead of batch-"
-                             "only: loads the prior chain's band_index/"
-                             "corpus_all deltas (state_chain.json: "
-                             "every doc that reached near-dup, shipped "
-                             "or dropped), probes only the new batch's "
-                             "bands (dedup cost tracks batch size, not "
-                             "corpus size), and appends this batch's "
-                             "delta + manifest so runs chain with "
-                             "O(batch) state IO.  Only batch docs drop; "
-                             "equals a one-shot run over prior+batch "
-                             "whenever prior doc_ids order before the "
-                             "batch's (ingestion-ordered ids), else the "
-                             "first arrival is kept")
+    parser.add_argument("--state-dir", default=None, metavar="DIR",
+                        help="SnapshotStore root of the incremental dedup "
+                             "state, shared with stream_curate_job: dedup "
+                             "this run against the state the last "
+                             "committed run left (paragraph keys, LSH "
+                             "band index and texts of every doc that "
+                             "reached near-dup, shipped or dropped; cost "
+                             "tracks the batch, not the corpus), then "
+                             "append this run's deltas and commit them as "
+                             "the next epoch.  A run killed before its "
+                             "commit leaves state the next run never "
+                             "reads.  Only batch docs drop; equals a "
+                             "one-shot run over all batches whenever "
+                             "earlier doc_ids order before later ones "
+                             "(ingestion-ordered ids), else the first "
+                             "arrival is kept.  Omit to write no state")
     parser.add_argument("--decontam-n", type=int, default=13)
     parser.add_argument("--max-per-source", type=int, default=0,
                         help="dominance cap; 0 disables")
@@ -131,6 +109,9 @@ def main(argv: list | None = None) -> dict:
                                               per_group_cap)
     from kit_spark.pyfiles import ensure_shipped
     from kit_spark.session import get_spark
+    from kit_spark.sources.tables import SnapshotStore
+    from kit_spark.streaming.curation import (COMMIT_TABLE, commit_state,
+                                              read_state)
 
     spark = get_spark("kit_spark_curate", cores=args.cores)
     ensure_shipped(spark)
@@ -145,8 +126,13 @@ def main(argv: list | None = None) -> dict:
         redacted = redact_pii(cleaned, text_col="text_clean")
     else:
         redacted = redact_pii(docs)
-    paras = DD.paragraph_dedup(redacted, text_col="text_redacted")
-    corpus = (paras.join(docs.select("doc_id", "source"), "doc_id")
+    # without --state-dir there are no pins, so read_state reads nothing
+    store = SnapshotStore(spark, args.state_dir) if args.state_dir else None
+    committed = store.meta(COMMIT_TABLE) if store else {}
+    para_index, near_state = read_state(store, committed)
+    paras = DD.plan_paragraph_dedup(redacted, state=para_index,
+                                    text_col="text_redacted")
+    corpus = (paras.docs.join(docs.select("doc_id", "source"), "doc_id")
               .select("doc_id", "source",
                       F.col("text_dedup").alias("text"),
                       "n_paras", "n_kept"))
@@ -167,11 +153,7 @@ def main(argv: list | None = None) -> dict:
     corpus = lifecycle.track(corpus)
     counts["after_clean_gates"] = corpus.count()
 
-    state = None
-    if args.incremental:
-        state = (load_state(spark, args.incremental, "band_index"),
-                 load_state(spark, args.incremental, "corpus_all"))
-    near = DD.plan_near_dup(corpus, state=state, jaccard=args.jaccard)
+    near = DD.plan_near_dup(corpus, state=near_state, jaccard=args.jaccard)
     corpus = corpus.join(near.losers, "doc_id", "left_anti")
     counts["after_near_dup"] = corpus.count()
 
@@ -198,17 +180,18 @@ def main(argv: list | None = None) -> dict:
     counts["train_final"] = train.count()
 
     split.write.mode("overwrite").parquet(f"{args.workdir}/corpus")
-    # the dedup state the NEXT --incremental run reads: plan_near_dup's
-    # delta (bands + texts of every doc that reached near-dup).  O(batch)
-    # IO: only this batch's rows go in a new delta directory, and
-    # state_chain.json records the chain; prior runs' parquet is never
-    # rewritten (read side: state_chain/load_state)
-    near.bands.write.mode("overwrite").parquet(f"{args.workdir}/band_index")
-    near.texts.write.mode("overwrite").parquet(f"{args.workdir}/corpus_all")
-    chain = (state_chain(args.incremental) if args.incremental else []) \
-        + [os.path.abspath(args.workdir)]
-    with open(f"{args.workdir}/state_chain.json", "w") as fh:
-        json.dump({"chain": chain}, fh)
+    if store is not None:
+        # the dedup state the next run reads: this batch's deltas only
+        # (O(batch) IO; earlier snapshots are never rewritten), committed
+        # as one epoch with a fresh run identity, so a stream replaying
+        # epoch ids on this state dir fails fast instead of skipping
+        commit_state(store, committed, committed.get("epoch", -1) + 1,
+                     {"para_index": paras.keys, "band_index": near.bands,
+                      "corpus_all": near.texts},
+                     (counts["input"],
+                      counts["after_clean_gates"] - counts["after_near_dup"],
+                      counts["train"] + counts["heldout"]),
+                     run_id=uuid.uuid4().hex)
     blocks = lifecycle.track(pack_sequences(train, args.block_size))
     blocks.write.mode("overwrite").parquet(f"{args.workdir}/blocks")
     counts["block_rows"] = blocks.count()

@@ -12,9 +12,12 @@ near-dup -> decontamination against the dedup state persisted under
 --state-dir (kit_spark.streaming.curation).  Each invocation is one
 ``availableNow`` catch-up pass: it processes every file the checkpoint
 has not seen, commits state exactly-once per epoch, and exits — so the
-job chains across invocations exactly as curate_job's --incremental
-mode chains across runs, with the checkpoint handling file tracking
-instead of the operator handling id bookkeeping.  Leave a scheduler
+job chains across invocations exactly as curate_job's --state-dir runs
+chain, through the same state tables and commit protocol
+(streaming.curation.read_state / commit_state), with the checkpoint
+handling file tracking.  One state dir serves one of the two jobs: a
+curate_job commit carries a fresh run identity, so a stream started on
+its state fails fast rather than skip batches.  Leave a scheduler
 re-invoking it (or swap the trigger) for a live stream.
 
 Prints one JSON summary: epochs committed this invocation, per-epoch

@@ -321,6 +321,13 @@ def simhash_near_pairs(sim: DataFrame, max_hamming: int = 3,
 # --- n-gram jaccard verify ---------------------------------------------------
 
 
+class ParagraphPlan(NamedTuple):
+    """:func:`plan_paragraph_dedup`'s result: the deduped batch, and the
+    state delta of its paragraph keys."""
+    docs: DataFrame  # (doc_id, out_col, n_paras, n_kept)
+    keys: DataFrame  # (para_key)
+
+
 def paragraph_dedup(docs: DataFrame, id_col: str = "doc_id",
                     text_col: str = "text", min_chars: int = 1,
                     hash_paras: bool = True,
@@ -359,67 +366,42 @@ def paragraph_dedup(docs: DataFrame, id_col: str = "doc_id",
     conservative direction for dedup; ``hash_paras=False`` keys on the
     exact normalized string (bit-exact, the DuckDB-oracle twin).
     """
-    return _paragraph_dedup_core(docs, None, id_col, text_col, min_chars,
-                                 hash_paras, out_col)
+    return plan_paragraph_dedup(docs, id_col=id_col, text_col=text_col,
+                                min_chars=min_chars, hash_paras=hash_paras,
+                                out_col=out_col).docs
 
 
-def paragraph_key_index(docs: DataFrame, id_col: str = "doc_id",
-                        text_col: str = "text", min_chars: int = 1,
-                        hash_paras: bool = True) -> DataFrame:
-    """Distinct eligible paragraph keys of a corpus — the persisted state
-    for :func:`paragraph_dedup_incremental` (one ``para_key`` column;
-    8-byte ``xxhash64`` longs with ``hash_paras``, the exact normalized
-    string otherwise).  Every eligible key of a processed batch enters
-    the index, whether its first occurrence shipped in that batch or was
-    itself knocked out by a prior batch — the index records "seen", and
-    dedup keeps only the globally first sighting.
+def plan_paragraph_dedup(docs: DataFrame, *, state: DataFrame | None = None,
+                         id_col: str = "doc_id", text_col: str = "text",
+                         min_chars: int = 1, hash_paras: bool = True,
+                         out_col: str = "text_dedup") -> ParagraphPlan:
+    """:func:`paragraph_dedup` for a batch of ``docs`` against ``state``,
+    the ``para_key`` table of every paragraph seen before (earlier calls'
+    ``keys``): a paragraph whose key is in ``state`` lost to an earlier
+    batch and drops everywhere in this one; keys ``state`` has never seen
+    elect their in-batch first occurrence exactly as the one-shot
+    operator does.
 
-    Scale shape: one map-side-combinable distinct over 8-byte longs; at
-    the 10^10-doc design point the index is the paragraph analog of the
-    crawl engine's url_seen table (persist bucketed by ``para_key`` so
-    the incremental anti-join co-locates without a fresh shuffle).
-    """
-    paras = docs.select(
-        F.posexplode(F.split(F.col(text_col), "\n")).alias("pos", "para"))
-    norm = norm_text(F.col("para"))
-    key = F.xxhash64(norm) if hash_paras else norm
-    return (paras.where(F.length(norm) >= min_chars)
-            .select(key.alias("para_key")).distinct())
-
-
-def paragraph_dedup_incremental(new_docs: DataFrame, index: DataFrame,
-                                id_col: str = "doc_id",
-                                text_col: str = "text", min_chars: int = 1,
-                                hash_paras: bool = True,
-                                out_col: str = "text_dedup") -> DataFrame:
-    """:func:`paragraph_dedup` for a NEW batch against the persisted
-    ``para_key`` index of every previously processed batch
-    (:func:`paragraph_key_index`): a paragraph whose key is already in
-    the index lost to an earlier batch and is dropped everywhere in this
-    one; keys the index has never seen elect their in-batch first
-    occurrence exactly as the one-shot operator does.
+    ``keys`` is the batch's eligible keys minus ``state`` (one
+    ``para_key`` column: 8-byte ``xxhash64`` longs with ``hash_paras``,
+    the exact normalized string otherwise), the delta to append to
+    ``state``.  It is the key column of the winner election's aggregate,
+    so it costs no second explode.  Every eligible key enters, whether
+    its first occurrence ships or is later dropped by another stage: the
+    state records "seen".
 
     Contract (pinned in tests/test_streaming_curation.py): with batches
     disjoint on ``id_col`` and arriving in ascending-id order, chaining
-    this per batch — appending ``paragraph_key_index(batch)`` to the
-    index between batches — reproduces ``paragraph_dedup`` of the union
+    this per batch reproduces ``paragraph_dedup`` of the union
     row-for-row.  With out-of-order ids the union's winner may sit in a
-    later batch; the incremental result then keeps the FIRST-ARRIVED
-    occurrence instead (arrival-order semantics — what a streaming
-    dedup means by "first").
+    later batch; the chain then keeps the FIRST-ARRIVED occurrence
+    instead (arrival-order semantics, as in ``plan_near_dup``).
 
-    Scale shape: identical to the one-shot operator plus one anti-join
-    of the batch's eligible paragraphs against the index on 8-byte
-    longs — cost tracks the BATCH size, never the corpus size, the text
-    analog of probing the url_seen filter.
+    Scale shape: the one-shot operator's plus one anti-join of the
+    batch's eligible paragraphs against ``state`` on 8-byte longs: cost
+    tracks the batch, never the corpus (the text analog of probing the
+    url_seen filter).
     """
-    return _paragraph_dedup_core(new_docs, index, id_col, text_col,
-                                 min_chars, hash_paras, out_col)
-
-
-def _paragraph_dedup_core(docs: DataFrame, index: DataFrame | None,
-                          id_col: str, text_col: str, min_chars: int,
-                          hash_paras: bool, out_col: str) -> DataFrame:
     paras = docs.select(
         F.col(id_col).alias("doc_id"),
         F.posexplode(F.split(F.col(text_col), "\n")).alias("pos", "para"))
@@ -428,12 +410,12 @@ def _paragraph_dedup_core(docs: DataFrame, index: DataFrame | None,
         "__k", F.xxhash64(norm) if hash_paras else norm).withColumn(
         "__elig", F.length(norm) >= min_chars)
     fresh = paras.where("__elig")
-    if index is not None:
+    if state is not None:
         # keys already seen by a prior batch have no in-batch winner:
         # every occurrence here is a repeat of an already-shipped
         # paragraph, so the left join below leaves __w null -> dropped
         fresh = fresh.join(
-            index.select(F.col("para_key").alias("__k")), "__k", "left_anti")
+            state.select(F.col("para_key").alias("__k")), "__k", "left_anti")
     winners = (fresh
                .groupBy("__k")
                .agg(F.min(F.struct("doc_id", "pos")).alias("__w")))
@@ -452,11 +434,12 @@ def _paragraph_dedup_core(docs: DataFrame, index: DataFrame | None,
     totals = docs.select(
         F.col(id_col).alias("doc_id"),
         F.size(F.split(F.col(text_col), "\n")).alias("n_paras"))
-    return (totals.join(rebuilt, "doc_id", "left")
-            .select("doc_id",
-                    F.coalesce(F.col(out_col), F.lit("")).alias(out_col),
-                    "n_paras",
-                    F.coalesce("n_kept", F.lit(0)).alias("n_kept")))
+    out = (totals.join(rebuilt, "doc_id", "left")
+           .select("doc_id",
+                   F.coalesce(F.col(out_col), F.lit("")).alias(out_col),
+                   "n_paras",
+                   F.coalesce("n_kept", F.lit(0)).alias("n_kept")))
+    return ParagraphPlan(out, winners.select(F.col("__k").alias("para_key")))
 
 
 def ngram_jaccard_pairs(docs: DataFrame, pairs: DataFrame,

@@ -116,16 +116,6 @@ def fingerprint64(col) -> Column:
         .cast("bigint")
 
 
-def with_text_stats(df: DataFrame, text_col: str = "text") -> DataFrame:
-    col = F.col(text_col)
-    return (df
-            .withColumn("n_tokens", token_count(col))
-            .withColumn("n_tokens_bpeish", cheap_token_count(col))
-            .withColumn("quality", quality_score(col))
-            .withColumn("lang_guess", lang_guess(col))
-            .withColumn("fingerprint", fingerprint64(col)))
-
-
 def repetition_stats(df: DataFrame, text_col: str = "text",
                      ngram_sizes: tuple = (2, 3, 4)) -> DataFrame:
     """Gopher-style repetition quality filters (Rae et al. 2021,

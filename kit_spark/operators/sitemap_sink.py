@@ -137,18 +137,3 @@ def render_sitemap_index(files: DataFrame) -> str:
     for row in files.select("sitemap_url").orderBy("sitemap_url").collect():
         builder.write(row["sitemap_url"])
     return builder.close()
-
-
-def write_sitemap_tree(urls: DataFrame, base_url: str, out_dir: str,
-                       kind: str = "urlset") -> dict:
-    """Render + persist the whole tree (files as parquet rows for snapshot
-    storage; text export is one `.write.text` away)."""
-    files = render_sitemap_files(urls, base_url, kind).cache()
-    files.write.mode("overwrite").parquet(f"{out_dir}/sitemap_files")
-    index_body = render_sitemap_index(files)
-    n = files.count()
-    files.unpersist()
-    with open(f"{out_dir.replace('file:', '')}/sitemap-index.xml", "w",
-              encoding="utf-8") as fh:
-        fh.write(index_body)
-    return {"files": n, "index": f"{out_dir}/sitemap-index.xml"}

@@ -7,8 +7,8 @@ curated as it is crawled instead of in one giant batch:
 
 * clean (C4 line/page filters) -> PII redaction — stateless, map-only;
 * cross-document paragraph dedup against the persisted ``para_index``
-  key table (functions.dedup.paragraph_dedup_incremental) — a paragraph
-  seen in ANY earlier batch is boilerplate here;
+  key table (functions.dedup.plan_paragraph_dedup) — a paragraph seen in
+  ANY earlier batch is boilerplate here;
 * MinHash/LSH near-dup against the persisted ``band_index`` with n-gram
   Jaccard verify against the cumulative ``corpus_all`` text table
   (functions.dedup.plan_near_dup) — cost tracks the batch, never the corpus;
@@ -26,7 +26,9 @@ deltas chained PAST the orphan snapshots, and re-commits; a batch
 retried after a COMMITTED epoch is detected by the epoch watermark and
 skipped.  This is the same torn-commit recovery the crawl driver's
 driver_state table implements (kit_spark/crawl.py), applied to the
-curation state.
+curation state.  :func:`read_state` and :func:`commit_state` are that
+protocol's two halves; ``jobs/curate_job.py --state-dir`` commits
+through them too, one epoch per run.
 
 Near-dup semantics (functions.dedup.plan_near_dup's one loser rule):
 ``band_index``/``corpus_all`` cover every doc SEEN (shipped or dropped),
@@ -53,21 +55,59 @@ from ..functions.decontam import decontaminate
 
 @dataclass(frozen=True)
 class CurationStreamConfig:
-    """Knobs mirror jobs/curate_job.py's flags."""
+    """Knobs mirror jobs/stream_curate_job.py's flags; the dedup operators
+    run at their defaults."""
     c4: bool = True
     min_words: int = 5           # C4 line gate
     min_sentences: int = 3       # C4 page gate
-    k: int = 8                   # MinHash signature length
-    minhash_n: int = 3           # shingle size
-    rows_per_band: int = 2
     max_bucket: int | None = None
     jaccard: float = 0.8
     decontam_n: int = 13
-    hash_paras: bool = True
 
 
-STATE_TABLES = ("para_index", "band_index", "corpus_all", "curated")
 COMMIT_TABLE = "curation_metrics"
+
+
+def read_state(store, committed: dict):
+    """The dedup state as of the commit ``committed`` (the commit table's
+    meta): ``(para_index, near)``, where ``near`` is
+    ``plan_near_dup``'s ``(band_index, corpus_all)`` state.  Each is None
+    before its first commit.  Strictly pin-resolved: an orphan snapshot
+    a torn epoch left behind is never read, exactly as crawl resume
+    ignores orphans."""
+    pins = committed.get("pins", {})
+
+    def pinned(name: str) -> DataFrame | None:
+        snap = pins.get(name)
+        return store.read(name, snap) if snap else None
+
+    bands = pinned("band_index")
+    near = None if bands is None else (bands, pinned("corpus_all"))
+    return pinned("para_index"), near
+
+
+def commit_state(store, committed: dict, epoch: int,
+                 deltas: dict[str, DataFrame], counts: tuple[int, int, int],
+                 run_id: str | None = None) -> None:
+    """Append each state delta chained onto ``committed``'s pin (PAST any
+    torn orphans), then commit the epoch by appending its metrics row,
+    ``counts`` = (n_input, n_near_dup_dropped, n_shipped), last: its
+    snapshot meta carries the new pins and the run identity."""
+    pins = committed.get("pins", {})
+    emeta = {"epoch": epoch}
+    new_pins = {name: store.append(name, delta, meta=emeta,
+                                   parent=pins.get(name))
+                for name, delta in deltas.items()}
+    # the metrics append IS the epoch commit point.  curation_metrics'
+    # pointer only ever moves on a completed epoch, so its default parent
+    # (the current pointer) is always the last commit
+    metrics = store.spark.createDataFrame(
+        [(int(epoch), *counts)],
+        "epoch long, n_input long, n_near_dup_dropped long, n_shipped long")
+    commit_meta = {"epoch": epoch, "pins": new_pins}
+    if run_id is not None:
+        commit_meta["run_id"] = run_id  # checkpoint identity (see skip path)
+    store.append(COMMIT_TABLE, metrics, meta=commit_meta)
 
 
 def stream_documents(spark: SparkSession, directory: str,
@@ -128,14 +168,7 @@ def _curate_batch_inner(batch: DataFrame, epoch_id: int, store,
                         benchmark: DataFrame | None,
                         cfg: CurationStreamConfig, committed: dict,
                         run_id: str | None = None) -> None:
-    pins = committed.get("pins", {})
-
-    def pinned(name: str) -> DataFrame | None:
-        # strictly pin-resolved: an orphan snapshot a torn epoch left
-        # behind is never read, exactly as crawl resume ignores orphans
-        snap = pins.get(name)
-        return store.read(name, snap) if snap else None
-
+    para_index, near_state = read_state(store, committed)
     n_input = batch.count()
 
     # -- stateless stages: clean -> redact ---------------------------------
@@ -147,30 +180,17 @@ def _curate_batch_inner(batch: DataFrame, epoch_id: int, store,
         redacted = redact_pii(batch)
 
     # -- incremental cross-document paragraph dedup ------------------------
-    para_index = pinned("para_index")
-    if para_index is None:
-        paras = DD.paragraph_dedup(redacted, text_col="text_redacted",
-                                   hash_paras=cfg.hash_paras)
-    else:
-        paras = DD.paragraph_dedup_incremental(
-            redacted, para_index, text_col="text_redacted",
-            hash_paras=cfg.hash_paras)
-    new_keys = DD.paragraph_key_index(redacted, text_col="text_redacted",
-                                      hash_paras=cfg.hash_paras)
-    if para_index is not None:
-        new_keys = new_keys.join(para_index, "para_key", "left_anti")
+    paras = DD.plan_paragraph_dedup(redacted, state=para_index,
+                                    text_col="text_redacted")
     # the post-paragraph corpus feeds four dataflows (signatures, the
     # Jaccard verify, the corpus_all append, the curated append): pin it
     # for the batch, released in _curate_batch's finally
     docs = lifecycle.track(
-        paras.join(batch.select("doc_id", "source"), "doc_id")
+        paras.docs.join(batch.select("doc_id", "source"), "doc_id")
         .select("doc_id", "source", F.col("text_dedup").alias("text")))
 
     # -- incremental near-dup: batch vs the seen corpus --------------------
-    band_index = pinned("band_index")
-    state = None if band_index is None else (band_index, pinned("corpus_all"))
-    near = DD.plan_near_dup(docs, state=state, k=cfg.k, n=cfg.minhash_n,
-                            rows_per_band=cfg.rows_per_band,
+    near = DD.plan_near_dup(docs, state=near_state,
                             max_bucket=cfg.max_bucket, jaccard=cfg.jaccard)
     shipped = docs.join(near.losers, "doc_id", "left_anti")
     n_dup_dropped = near.losers.count()
@@ -178,37 +198,18 @@ def _curate_batch_inner(batch: DataFrame, epoch_id: int, store,
     # -- decontamination (static held-out benchmark) -----------------------
     if benchmark is not None:
         shipped = decontaminate(shipped, benchmark, n=cfg.decontam_n)
-    # pinned: consumed by the curated append AND the metrics count below —
-    # and counting the DataFrame keeps this module on the narrow store
+    # pinned: consumed by the metrics count AND the curated append — and
+    # counting the DataFrame keeps this module on the narrow store
     # interface (reading the delta back via store.root broke on any store
     # whose layout is not the parquet SnapshotStore's)
     shipped = lifecycle.track(shipped)
+    n_shipped = shipped.count()  # fills the cache the append reads
 
-    # -- state deltas, chained onto the pins (PAST any torn orphans) -------
-    emeta = {"epoch": epoch_id}
-    new_pins = {
-        "para_index": store.append("para_index", new_keys,
-                                   meta=emeta, parent=pins.get("para_index")),
-        # the index records SEEN docs (shipped or dropped) — see module doc
-        "band_index": store.append("band_index", near.bands, meta=emeta,
-                                   parent=pins.get("band_index")),
-        "corpus_all": store.append("corpus_all", near.texts, meta=emeta,
-                                   parent=pins.get("corpus_all")),
-        "curated": store.append("curated", shipped,
-                                meta=emeta, parent=pins.get("curated")),
-    }
-    n_shipped = shipped.count()  # cache hit: the append materialized it
-
-    # -- atomic commit: the metrics append IS the epoch commit point.
-    # curation_metrics' pointer only ever moves on a completed epoch, so
-    # its default parent (the current pointer) is always the last commit.
-    metrics = batch.sparkSession.createDataFrame(
-        [(int(epoch_id), n_input, n_dup_dropped, n_shipped)],
-        "epoch long, n_input long, n_near_dup_dropped long, n_shipped long")
-    commit_meta = {"epoch": epoch_id, "pins": new_pins}
-    if run_id is not None:
-        commit_meta["run_id"] = run_id  # checkpoint identity (see skip path)
-    store.append(COMMIT_TABLE, metrics, meta=commit_meta)
+    # the index records SEEN docs (shipped or dropped) — see module doc
+    commit_state(store, committed, epoch_id,
+                 {"para_index": paras.keys, "band_index": near.bands,
+                  "corpus_all": near.texts, "curated": shipped},
+                 (n_input, n_dup_dropped, n_shipped), run_id)
 
 
 def run_streaming_curation(doc_stream: DataFrame, store,

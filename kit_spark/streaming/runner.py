@@ -13,8 +13,9 @@ expresses the same per-round dataflow as a Structured Streaming pipeline:
   frontier snapshot tables exactly as in batch — foreachBatch gives
   exactly-once table commits per micro-batch epoch.
 
-Also provides a watermarked windowed fetch-metrics stream (late fetch logs
-tolerated up to the watermark) as the streaming-aggregation surface.
+Also provides watermarked per-host session windows over the fetch stream
+(late fetch logs tolerated up to the watermark) as the
+streaming-aggregation surface.
 """
 
 from __future__ import annotations
@@ -53,18 +54,6 @@ def run_streaming_rounds(driver, candidate_stream: DataFrame,
             .foreachBatch(process)
             .option("checkpointLocation", checkpoint_dir)
             .trigger(availableNow=True))
-
-
-def fetch_metrics_stream(fetch_log_stream: DataFrame,
-                         watermark: str = "10 minutes") -> DataFrame:
-    """Watermarked windowed rollup of fetch outcomes (late rows tolerated
-    up to the watermark) — the streaming metrics surface (S15 analog)."""
-    return (fetch_log_stream
-            .withWatermark("fetched_at", watermark)
-            .groupBy(F.window("fetched_at", "5 minutes"), "host_key")
-            .agg(F.count("*").alias("n_fetches"),
-                 F.sum(F.col("fetch_ok").cast("long")).alias("n_ok"),
-                 F.sum("fetched_bytes").alias("bytes")))
 
 
 def host_session_windows(fetch_log_stream: DataFrame,

@@ -112,16 +112,10 @@ def _job_args(wd, sf):
             "--max-dup-line-frac", "1.0", "--max-top2gram-frac", "1.0"]
 
 
-def test_curate_job_incremental_equals_one_shot(spark, tmp_path):
-    """batch A, then batch B with --incremental against A's workdir,
-    ships exactly the docs a one-shot run over A+B ships — the
-    incremental band index is load-bearing on the job surface (the
-    operator-level pair equivalence is pinned in
-    tests/test_incremental_dedup.py).  Planted duplicates: within-A,
-    within-B, cross-batch identical, a cross-batch identical CHAIN, and
-    a cross-batch near-identical (one word swapped) pair."""
-    from jobs.curate_job import main
-
+def _incremental_batches():
+    """Batches A and B with planted duplicates: within-A, within-B,
+    cross-batch identical, a cross-batch identical CHAIN, and a
+    cross-batch near-identical (one word swapped) pair."""
     a_rows = [(i, f"src{i % 3}", _doc_text(i)) for i in range(30)]
     a_rows[6] = (6, "src0", _doc_text(5))          # within-A dup of 5
     b_rows = [(100 + i, f"src{i % 3}", _doc_text(100 + i)) for i in range(30)]
@@ -131,36 +125,53 @@ def test_curate_job_incremental_equals_one_shot(spark, tmp_path):
     b_rows[21] = (121, "src0", _doc_text(120))     # within-B dup of 120
     near = _doc_text(9).replace("many years", "long years", 1)
     b_rows[29] = (129, "src2", near)               # near-dup of A's 9
+    return a_rows, b_rows
 
-    dirs = {k: str(tmp_path / k) for k in ("A", "B", "F", "wA", "wB", "wF")}
+
+def _shipped(spark, wd):
+    return {r["doc_id"] for r in
+            spark.read.parquet(f"{wd}/corpus").select("doc_id").collect()}
+
+
+def test_curate_job_incremental_equals_one_shot(spark, tmp_path):
+    """batch A, then batch B, both with one --state-dir, ships exactly
+    the docs a one-shot run over A+B ships — the incremental paragraph
+    keys and band index are load-bearing on the job surface (the
+    operator-level pair equivalence is pinned in
+    tests/test_incremental_dedup.py)."""
+    from jobs.curate_job import main
+    from kit_spark.sources.tables import SnapshotStore
+    from kit_spark.streaming.curation import COMMIT_TABLE
+
+    a_rows, b_rows = _incremental_batches()
+    dirs = {k: str(tmp_path / k)
+            for k in ("A", "B", "F", "wA", "wB", "wF", "state")}
     _write_docs(spark, a_rows, dirs["A"])
     _write_docs(spark, b_rows, dirs["B"])
     _write_docs(spark, a_rows + b_rows, dirs["F"])
+    state = ["--state-dir", dirs["state"]]
 
-    counts_a = main(_job_args(dirs["wA"], dirs["A"]))
+    counts_a = main(_job_args(dirs["wA"], dirs["A"]) + state)
+    store = SnapshotStore(spark, dirs["state"])
+    pins_a = store.meta(COMMIT_TABLE)["pins"]
 
-    def state_files(wd):
+    def state_files(pins):
         out = {}
-        for tbl in ("band_index", "corpus_all"):
-            d = os.path.join(wd, tbl)
+        for tbl, snap in pins.items():
+            d = os.path.join(dirs["state"], tbl, snap)
             out[tbl] = {f: os.path.getmtime(os.path.join(d, f))
                         for f in os.listdir(d) if not f.startswith(".")}
         return out
 
-    a_state_before = state_files(dirs["wA"])
-    counts_b = main(_job_args(dirs["wB"], dirs["B"])
-                    + ["--incremental", dirs["wA"]])
-    # O(batch) state IO: the incremental run never rewrites the prior
-    # run's state files — it only appends its own delta + chain manifest
-    assert state_files(dirs["wA"]) == a_state_before
-    main(_job_args(dirs["wF"], dirs["F"]))
+    a_state_before = state_files(pins_a)
+    counts_b = main(_job_args(dirs["wB"], dirs["B"]) + state)
+    # O(batch) state IO: the second run never rewrites the first run's
+    # snapshots — it only appends its own deltas + commit row
+    assert state_files(pins_a) == a_state_before
+    counts_f = main(_job_args(dirs["wF"], dirs["F"]))
 
-    def shipped(wd):
-        return {r["doc_id"] for r in
-                spark.read.parquet(f"{wd}/corpus").select("doc_id")
-                .collect()}
-
-    ship_a, ship_b, ship_f = (shipped(dirs[k]) for k in ("wA", "wB", "wF"))
+    ship_a, ship_b, ship_f = (_shipped(spark, dirs[k])
+                              for k in ("wA", "wB", "wF"))
     assert ship_a | ship_b == ship_f          # the equivalence
     assert ship_a.isdisjoint(ship_b)
     # planted outcomes: every later copy dropped, every original kept
@@ -168,28 +179,90 @@ def test_curate_job_incremental_equals_one_shot(spark, tmp_path):
     for dup in (110, 115, 116, 121, 129):
         assert dup not in ship_b, dup
     assert 120 in ship_b
-    # the chained dedup state covers every doc that reached near-dup
+    # paragraph keys carry across runs: the cross-batch exact copies 110,
+    # 115 and 116 lose every paragraph to A's keys and fail the gates, as
+    # they do in the one-shot run, instead of reaching near-dup
+    assert (counts_a["after_clean_gates"] + counts_b["after_clean_gates"]
+            == counts_f["after_clean_gates"])
+    # the committed dedup state covers every doc that reached near-dup
     # (passed the gates), shipped or dropped — a dropped doc must still
-    # catch a later near-dup of itself — read through the delta chain as
-    # the next --incremental run would.  129 is dropped by near-dup
-    # itself; an exact copy can lose every paragraph to paragraph dedup
-    # and fail the gates first
-    from jobs.curate_job import load_state, state_chain
-
+    # catch a later near-dup of itself — read through the commit pins as
+    # the next run would.  129 is dropped by near-dup itself; an exact
+    # copy loses every paragraph to paragraph dedup and fails the gates
+    commit = store.meta(COMMIT_TABLE)
+    pins = commit["pins"]
     dropped_b = {129}
-    assert state_chain(dirs["wB"]) == [dirs["wA"], dirs["wB"]]
+    assert commit["epoch"] == 1
+    for tbl, snap in pins.items():   # B's deltas chain onto A's pins
+        assert store.meta(tbl, snap)["parent"] == pins_a[tbl]
     idx_ids = {r["doc_id"] for r in
-               load_state(spark, dirs["wB"], "band_index")
+               store.read("band_index", pins["band_index"])
                .select("doc_id").distinct().collect()}
     all_ids = {r["doc_id"] for r in
-               load_state(spark, dirs["wB"], "corpus_all")
+               store.read("corpus_all", pins["corpus_all"])
                .select("doc_id").collect()}
     assert idx_ids == all_ids
     assert len(all_ids) == (counts_a["after_clean_gates"]
                             + counts_b["after_clean_gates"])
     assert ship_a | ship_b | dropped_b <= all_ids
-    # ...and B's own delta directory holds ONLY B's batch rows
-    b_delta = {r["doc_id"] for r in
-               spark.read.parquet(f"{dirs['wB']}/corpus_all").collect()}
+    # ...and B's own delta snapshot holds ONLY B's batch rows
+    b_delta = {r["doc_id"] for r in spark.read.parquet(
+        os.path.join(dirs["state"], "corpus_all", pins["corpus_all"]))
+        .collect()}
     assert len(b_delta) == counts_b["after_clean_gates"]
     assert ship_b | dropped_b <= b_delta <= {r[0] for r in b_rows}
+
+
+def test_curate_job_torn_run_is_invisible(spark, tmp_path):
+    """A run killed after a state append but before its commit row leaves
+    an orphan snapshot.  The next run on that --state-dir reads through
+    the committed pins, so it ships what a run on untorn state ships, and
+    chains its deltas past the orphan.  A stream whose batch ids restart
+    at 0 on that state dir then fails fast on the run identity the job
+    committed, instead of silently skipping its batch."""
+    import shutil
+
+    import pytest
+
+    from jobs.curate_job import main
+    from kit_spark.functions.cleaning import redact_pii
+    from kit_spark.functions.dedup import plan_paragraph_dedup
+    from kit_spark.sources.tables import SnapshotStore
+    from kit_spark.streaming.curation import (COMMIT_TABLE,
+                                              CurationStreamConfig,
+                                              _curate_batch)
+
+    a_rows, b_rows = _incremental_batches()
+    dirs = {k: str(tmp_path / k)
+            for k in ("A", "B", "wA", "wB", "wT", "state", "torn")}
+    _write_docs(spark, a_rows, dirs["A"])
+    _write_docs(spark, b_rows, dirs["B"])
+    main(_job_args(dirs["wA"], dirs["A"]) + ["--state-dir", dirs["state"]])
+    shutil.copytree(dirs["state"], dirs["torn"])
+
+    # the torn run: B's paragraph keys landed, its commit row did not.
+    # Read, they would knock out every paragraph of B
+    torn = SnapshotStore(spark, dirs["torn"])
+    pins_a = torn.meta(COMMIT_TABLE)["pins"]
+    b_docs = spark.read.parquet(f"{dirs['B']}/documents.parquet")
+    orphan = torn.append(
+        "para_index", plan_paragraph_dedup(
+            redact_pii(b_docs), text_col="text_redacted").keys,
+        meta={"epoch": 1})
+
+    main(_job_args(dirs["wB"], dirs["B"]) + ["--state-dir", dirs["state"]])
+    main(_job_args(dirs["wT"], dirs["B"]) + ["--state-dir", dirs["torn"]])
+    untorn = _shipped(spark, dirs["wB"])
+    assert 120 in untorn
+    assert _shipped(spark, dirs["wT"]) == untorn
+    commit = torn.meta(COMMIT_TABLE)
+    assert commit["epoch"] == 1
+    para_pin = commit["pins"]["para_index"]
+    assert para_pin != orphan
+    assert torn.meta("para_index", para_pin)["parent"] == pins_a["para_index"]
+
+    batch = spark.createDataFrame([("d0", "web", "new text")],
+                                  "doc_id string, source string, text string")
+    with pytest.raises(RuntimeError, match="checkpoint"):
+        _curate_batch(batch, 0, torn, None, CurationStreamConfig(),
+                      run_id="stream-run")

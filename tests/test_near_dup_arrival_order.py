@@ -1,5 +1,5 @@
 """Arrival order on both incremental near-dup surfaces: the curation job
-(`jobs/curate_job.py`, one plain run then one ``--incremental`` run) and
+(`jobs/curate_job.py`, two runs on one ``--state-dir``) and
 the streaming micro-batch (`_curate_batch`, two epochs).
 
 Both apply one loser rule (`functions.dedup.plan_near_dup`): a batch doc
@@ -70,7 +70,7 @@ def test_incremental_near_dup_arrival_order(spark, tmp_path, case):
 
     b1, b2, oneshot = CASES[case]
 
-    # -- job surface: plain run, then --incremental against it -------------
+    # -- job surface: two runs on one --state-dir --------------------------
     def sf(name, rows):
         d = str(tmp_path / name)
         _write_docs(spark, [(i, "src0", t) for i, t in rows], d)
@@ -82,8 +82,9 @@ def test_incremental_near_dup_arrival_order(spark, tmp_path, case):
                 .collect()}
 
     w1, w2 = str(tmp_path / "w1"), str(tmp_path / "w2")
-    main(_job_args(w1, sf("b1", b1)))
-    main(_job_args(w2, sf("b2", b2)) + ["--incremental", w1])
+    state = ["--state-dir", str(tmp_path / "state")]
+    main(_job_args(w1, sf("b1", b1)) + state)
+    main(_job_args(w2, sf("b2", b2)) + state)
     job = shipped(w1) | shipped(w2)
 
     # -- streaming surface: two epochs over one store ----------------------

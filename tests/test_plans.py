@@ -175,22 +175,29 @@ def test_clean_corpus_cluster_plan_shape(spark):
 
 
 def test_no_bare_persist_in_catalog_entries():
-    # Every cache a catalog entry, a crawl round, the near-dup composition
-    # or a curation job/micro-batch pins must go through the lifecycle
+    # Every cache a catalog entry, a crawl round, an operator or a
+    # curation job/micro-batch pins must go through the lifecycle
     # (kit_spark/lifecycle.py), so one release drops it when the next
     # entry is built, the round or batch ends, or the job finishes.  A
     # bare .persist()/.cache() escapes that lifecycle and leaks one
     # cached DataFrame per catalog run, crawl round or batch.
+    import importlib
     import inspect
+    import pkgutil
     import re
 
     import jobs.curate_job as J
     import kit_spark.crawl as C
-    import kit_spark.functions.dedup as D
+    import kit_spark.functions as FN
+    import kit_spark.operators as OP
     import kit_spark.queries as Q
     import kit_spark.streaming.curation as S
 
-    for mod in (Q, C, D, S, J):
+    mods = [Q, C, S, J]
+    for pkg in (FN, OP):
+        mods += [importlib.import_module(f"{pkg.__name__}.{m.name}")
+                 for m in pkgutil.iter_modules(pkg.__path__)]
+    for mod in mods:
         src = inspect.getsource(mod)
         bare = re.findall(r"^.*\.(?:persist|cache)\(\).*$", src, re.M)
         assert not bare, (f"bare persist/cache outside lifecycle in "

@@ -2,7 +2,7 @@
 foreachBatch chain over persisted dedup state reproduces the one-shot
 batch pipeline for ascending-id batches with transitive duplicate
 groups, survives committed-epoch replays and torn-epoch orphans, and
-paragraph_dedup_incremental chains to the one-shot paragraph_dedup."""
+plan_paragraph_dedup chains to the one-shot paragraph_dedup."""
 
 import pytest
 from pyspark.sql import functions as F
@@ -57,14 +57,13 @@ def _oneshot(spark, union_df, benchmark, cfg):
                              min_sentences=cfg.min_sentences)
     red = redact_pii(cleaned, text_col="text_clean")
     paras = DD.paragraph_dedup(red, text_col="text_redacted",
-                               hash_paras=cfg.hash_paras)
+                               hash_paras=True)
     docs = (paras.join(union_df.select("doc_id", "source"), "doc_id")
             .select("doc_id", "source", F.col("text_dedup").alias("text")))
-    sig = DD.minhash_signatures(docs, k=cfg.k, n=cfg.minhash_n)
-    pairs = DD.lsh_candidate_pairs(sig, k=cfg.k,
-                                   rows_per_band=cfg.rows_per_band,
+    sig = DD.minhash_signatures(docs, k=8, n=3)
+    pairs = DD.lsh_candidate_pairs(sig, k=8, rows_per_band=2,
                                    max_bucket=cfg.max_bucket)
-    verified = DD.ngram_jaccard_pairs(docs, pairs, n=cfg.minhash_n)
+    verified = DD.ngram_jaccard_pairs(docs, pairs, n=3)
     dup = verified.where(F.col("jaccard") >= cfg.jaccard).select("a", "b")
     shipped = docs.join(dedup_cluster_losers(dup), "doc_id", "left_anti")
     if benchmark is not None:
@@ -82,7 +81,7 @@ def held_out(spark):
         "doc_id string, text string")
 
 
-def test_paragraph_dedup_incremental_matches_batch(spark):
+def test_plan_paragraph_dedup_chain_matches_batch(spark):
     """Chaining incremental paragraph dedup over ascending-id batches ==
     one-shot paragraph_dedup of the union, hashed and exact modes."""
     b1, b2 = _corpus_rows()
@@ -91,9 +90,9 @@ def test_paragraph_dedup_incremental_matches_batch(spark):
     for hp in (True, False):
         one = {(r["doc_id"], r["text_dedup"], r["n_paras"], r["n_kept"])
                for r in DD.paragraph_dedup(union, hash_paras=hp).collect()}
-        idx = DD.paragraph_key_index(d1, hash_paras=hp)
+        idx = DD.plan_paragraph_dedup(d1, hash_paras=hp).keys
         out1 = DD.paragraph_dedup(d1, hash_paras=hp)
-        out2 = DD.paragraph_dedup_incremental(d2, idx, hash_paras=hp)
+        out2 = DD.plan_paragraph_dedup(d2, state=idx, hash_paras=hp).docs
         got = {(r["doc_id"], r["text_dedup"], r["n_paras"], r["n_kept"])
                for r in out1.unionByName(out2).collect()}
         assert got == one
@@ -183,8 +182,8 @@ def test_streaming_curation_replay_and_torn_epoch(spark, tmp_path,
     # torn epoch 1: state deltas landed but the metrics commit did not —
     # simulate by appending epoch-1 paragraph keys and dying before commit
     store.append("para_index",
-                 DD.paragraph_key_index(redact_pii(d2),
-                                        text_col="text_redacted"),
+                 DD.plan_paragraph_dedup(redact_pii(d2),
+                                         text_col="text_redacted").keys,
                  meta={"epoch": 1})
     # the retry must NOT see the orphan keys (else every batch-2 paragraph
     # would be knocked out and d13's text would come back empty)
@@ -197,9 +196,9 @@ def test_streaming_curation_replay_and_torn_epoch(spark, tmp_path,
     assert got == want
 
 
-def test_paragraph_dedup_incremental_out_of_order_first_arrival_wins(spark):
+def test_plan_paragraph_dedup_out_of_order_first_arrival_wins(spark):
     """The documented arrival-order contract for NON-ascending ids
-    (functions/dedup.py paragraph_dedup_incremental): when a later batch
+    (functions/dedup.py plan_paragraph_dedup): when a later batch
     carries smaller ids, the FIRST-ARRIVED occurrence keeps the
     paragraph — not the union's (doc_id, pos) winner — and the per-doc
     counts reconcile."""
@@ -209,9 +208,10 @@ def test_paragraph_dedup_incremental_out_of_order_first_arrival_wins(spark):
           ("a11", f"prose before.\n{BOILER}")]
     d_hi, d_lo = _mkdocs(spark, hi), _mkdocs(spark, lo)
     for hp in (True, False):
-        idx = DD.paragraph_key_index(d_hi, hash_paras=hp)
+        idx = DD.plan_paragraph_dedup(d_hi, hash_paras=hp).keys
         out_hi = DD.paragraph_dedup(d_hi, hash_paras=hp)
-        out_lo = DD.paragraph_dedup_incremental(d_lo, idx, hash_paras=hp)
+        out_lo = DD.plan_paragraph_dedup(d_lo, state=idx,
+                                         hash_paras=hp).docs
         got_hi = {r["doc_id"]: r for r in out_hi.collect()}
         got_lo = {r["doc_id"]: r for r in out_lo.collect()}
         # first arrival (z90, the earlier batch) keeps the boilerplate;
