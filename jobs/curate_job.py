@@ -24,8 +24,9 @@ shards.  Writes the curated corpus, the block map, and the image
 shard map under --workdir and prints one JSON summary of per-stage
 counts.  With --state-dir, both dedup stages run against the state the
 earlier runs committed there, and the run commits its own deltas as
-the next epoch (kit_spark.streaming.curation's protocol, shared with
-jobs/stream_curate_job.py).  ``python jobs/curate_job.py`` works too
+the next epoch (the store's commit protocol, through
+kit_spark.streaming.curation, shared with jobs/stream_curate_job.py and
+the crawl driver).  ``python jobs/curate_job.py`` works too
 (local session).
 
 Every stage is the Spark-shaped operator documented in its module — no

@@ -23,13 +23,18 @@ only in their inputs and sinks.  The driver adds steps 5-6 and the commits:
 5. simulated fetch against the image table + per-row invariant (D7)
 6. discovered links -> next-round candidates
 
-Checkpoint/resume (D8): every table commits a new immutable snapshot per
-round; ``driver_state`` — written last — maps each state table to the
-snapshot the next round must read.  A crash mid-commit leaves orphan
-snapshots but a consistent driver_state, so the round replays
-deterministically and idempotently.  ``lineage`` records (round, table,
-snapshot, rows) per commit; ``metrics`` aggregates per round (byte counts
-via length(bytes) — the countio S15 analog).
+Checkpoint/resume (D8): every state table, ``metrics`` included, commits a
+new immutable snapshot per round; then the round commits with ONE append
+to ``driver_state`` (sources/tables.commit_log, the protocol the curation
+state shares).  The appended rows are the round's lineage — (round, table,
+snapshot, rows) per committed table, read back as ``table("lineage")`` —
+and the snapshot meta carries the round number, the pins (the snapshot
+each table's next read resolves through) and the row counts.  Resume is
+one meta read, no Spark job.  A crash before that append leaves orphan
+snapshots but the previous commit, so the round replays deterministically
+and idempotently, chaining its deltas past the orphans.  ``metrics``
+aggregates per round (byte counts via length(bytes) — the countio S15
+analog).
 """
 
 from __future__ import annotations
@@ -51,7 +56,9 @@ from kit_spark.operators.frontier import (admit_candidates,
                                           politeness_schedule,
                                           sequence_schedule)
 from kit_spark.operators.sitemap_expand import expand_sitemaps_df
-from kit_spark.sources.tables import SnapshotStore, bucketed_by_url
+from kit_spark.sources.tables import (SnapshotStore, append_pinned,
+                                      bucketed_by_url, commit_log,
+                                      read_pinned)
 
 CANDIDATE_SCHEMA = "url string, priority double"
 FRONTIER_SCHEMA = ("url_canon string, host_key string, match_path string, "
@@ -67,9 +74,7 @@ METRICS_SCHEMA = ("round int, candidates_in long, admitted long, denied long, "
                   "fetch_failed long, bytes long")
 LINEAGE_SCHEMA = "round int, table string, snapshot string, rows long"
 
-STATE_TABLES = ("candidates", "frontier", "url_seen", "robots_cache",
-                "schedule", "fetch_log", "metrics", "lineage",
-                "url_seen_bloom")
+COMMIT_TABLE = "driver_state"  # the commit log; its rows are the lineage
 SEEN_BUCKETS = 16  # url_seen's stable bucket layout (bucketed_by_url)
 
 
@@ -174,8 +179,7 @@ class CrawlDriver:
         self.sitemap_docs = sitemap_docs
         self.links = links
         self.config = config or SparkCrawlConfig()
-        self._snapshots: dict[str, str] = {}
-        self._counts: dict[str, int] = {}
+        self._committed: dict = {}  # driver_state meta: round, pins, counts
 
     # -- state helpers -------------------------------------------------------
 
@@ -183,50 +187,37 @@ class CrawlDriver:
         return self.spark.createDataFrame([], schema)
 
     def _read_state(self, name: str, schema) -> DataFrame:
-        snap = self._snapshots.get(name)
-        if snap is None:
-            return self._empty(schema)
-        return self.store.read(name, snap)
+        df = read_pinned(self.store, self._committed, name)
+        return self._empty(schema) if df is None else df
 
     def start(self, seeds: list[str]) -> None:
         """Initialize state from a seed list (fresh crawl)."""
         seed_df = self.spark.createDataFrame(
             [(s, PRIORITY_SEED) for s in seeds], CANDIDATE_SCHEMA)
         snap = self.store.write("candidates", seed_df)
-        self._write_driver_state(0, {"candidates": snap},
-                                 {"candidates": len(seeds)})
+        # the seed commit has no lineage: it appends no row
+        commit_log(self.store, COMMIT_TABLE, self._empty(LINEAGE_SCHEMA),
+                   {"candidates": snap}, round=0,
+                   counts={"candidates": len(seeds)})
 
-    def _write_driver_state(self, round_no: int, snapshots: dict,
-                            counts: dict) -> None:
-        rows = [(round_no, t, s, int(counts.get(t, -1)))
-                for t, s in snapshots.items()]
-        self.store.write("driver_state", self.spark.createDataFrame(
-            rows or [(round_no, "__none__", "", -1)],
-            "round int, table string, snapshot string, rows long"))
-
-    def _load_driver_state(self) -> int:
-        state = self.store.read_or_none("driver_state")
-        if state is None:
+    def _load_commit(self) -> int:
+        """Read the last commit (one meta read, no Spark job); returns the
+        round to run next."""
+        self._committed = self.store.meta(COMMIT_TABLE)
+        if "round" not in self._committed:
             raise RuntimeError("no crawl state to resume; call start()")
-        rows = state.collect()
-        self._snapshots = {r["table"]: r["snapshot"] for r in rows
-                           if r["table"] != "__none__"}
-        # committed row counts ride along in driver_state, so a round
-        # starts with ZERO Spark jobs spent on re-counting its inputs
-        self._counts = {r["table"]: r["rows"] for r in rows
-                        if r["table"] != "__none__"}
-        return rows[0]["round"]
+        return self._committed["round"]
 
     def run(self, seeds: list[str] | None = None) -> dict:
         """Run rounds until the frontier drains or max_rounds; resumable
         from the last committed round after a crash/kill."""
-        if seeds is not None and not self.store.exists("driver_state"):
+        if seeds is not None and not self.store.exists(COMMIT_TABLE):
             self.start(seeds)
-        round_no = self._load_driver_state()
+        round_no = self._load_commit()
         while round_no < self.config.max_rounds:
             if not self._run_round(round_no):
                 break
-            round_no = self._load_driver_state()
+            round_no = self._load_commit()
         return {"rounds": round_no}
 
     # -- one round -----------------------------------------------------------
@@ -239,16 +230,16 @@ class CrawlDriver:
         lineage: list = []
         candidates = self._read_state("candidates", CANDIDATE_SCHEMA)
 
-        # committed counts from driver_state — no recount jobs
-        n_candidates = max(self._counts.get("candidates", 0), 0)
-        n_frontier = max(self._counts.get("frontier", 0), 0)
+        # committed counts from the commit meta — no recount jobs
+        prior_counts = self._committed.get("counts", {})
+        n_candidates = prior_counts.get("candidates", 0)
+        n_frontier = prior_counts.get("frontier", 0)
         if n_candidates == 0 and n_frontier == 0:
             return False
 
         # 1-4. admit, robots, gate, schedule (D1-D5, D9)
-        bloom = (self._read_state("url_seen_bloom", None)
-                 if cfg.use_bloom and "url_seen_bloom" in self._snapshots
-                 else None)
+        bloom = (read_pinned(self.store, self._committed, "url_seen_bloom")
+                 if cfg.use_bloom else None)
         plan = plan_round(
             candidates, self._read_state("url_seen", SEEN_SCHEMA),
             self._fixture(self.robots_docs),
@@ -283,28 +274,26 @@ class CrawlDriver:
         # this round's rows + parent pointer): per-round write cost is
         # O(delta), not O(total) — a full rewrite per round would dominate
         # the round at the 10^10-row design point.  `counts` tracks chain
-        # totals so driver_state keeps whole-table row counts.
+        # totals so the commit meta keeps whole-table row counts.
         snaps: dict[str, str] = {}
         counts: dict[str, int] = {}
         extra_metrics: dict[str, dict] = {}
 
         def commit(name: str, df: DataFrame, extra: list | None = None,
-                   delta: bool = False, meta: dict | None = None) -> int:
+                   delta: bool = False) -> int:
             obs = Observation()
             observed = df.observe(obs, F.count(F.lit(1)).alias("rows"),
                                   *(extra or []))
             if delta:
-                # chain from the PINNED snapshot (what driver_state says is
-                # committed), never the pointer: replaying a torn round must
-                # bypass the orphan delta the crash left behind
-                snaps[name] = self.store.append(
-                    name, observed, meta=meta,
-                    parent=self._snapshots.get(name))
+                # chained from the last commit's pin, never the pointer:
+                # replaying a torn round bypasses the orphan it left
+                snaps[name] = append_pinned(self.store, self._committed,
+                                            name, observed)
             else:
-                snaps[name] = self.store.write(name, observed, meta=meta)
+                snaps[name] = self.store.write(name, observed)
             got = obs.get
             n = int(got["rows"])
-            counts[name] = n + (self._counts.get(name, 0) if delta else 0)
+            counts[name] = n + (prior_counts.get(name, 0) if delta else 0)
             extra_metrics[name] = got
             lineage.append((round_no, name, snaps[name], counts[name]))
             return n
@@ -346,24 +335,20 @@ class CrawlDriver:
         n_allowed = counts["frontier"] + n_scheduled - n_frontier
         n_denied = n_admitted - n_allowed
 
+        cap = self._committed.get("bloom_capacity", 0)
         if cfg.use_bloom:
             # rebuild at 2x only when the seen set outgrew the capacity
             # (scalable-Bloom amortization); otherwise merge the delta —
             # never re-hash the whole seen set every round
-            prev_snap = self._snapshots.get("url_seen_bloom")
-            prev_cap = int(self.store.meta("url_seen_bloom", prev_snap)
-                           .get("capacity", 0)) if prev_snap else 0
-            if prev_snap and counts["url_seen"] <= prev_cap:
+            if bloom is not None and counts["url_seen"] <= cap:
                 bloom_df = merge_bloom(
-                    self.store.read("url_seen_bloom", prev_snap),
-                    plan.admitted.select("url_canon"), prev_cap)
-                cap = prev_cap
+                    bloom, plan.admitted.select("url_canon"), cap)
             else:
                 cap = max(2 * counts["url_seen"], 1 << 14)
                 bloom_df = build_bloom(
                     self.store.read("url_seen", snaps["url_seen"]),
                     capacity=cap)
-            commit("url_seen_bloom", bloom_df, meta={"capacity": cap})
+            commit("url_seen_bloom", bloom_df)
         fetched = extra_metrics["fetch_log"]
         metrics_row = [(round_no, n_candidates, n_admitted, n_denied,
                         n_hosts_new, n_scheduled,
@@ -373,10 +358,10 @@ class CrawlDriver:
                                                      METRICS_SCHEMA),
                delta=True)
         lineage.sort()  # wave-1 threads append in completion order
-        commit("lineage", self.spark.createDataFrame(lineage,
-                                                     LINEAGE_SCHEMA),
-               delta=True)
-        self._write_driver_state(round_no + 1, snaps, counts)
+        commit_log(self.store, COMMIT_TABLE,
+                   self.spark.createDataFrame(lineage, LINEAGE_SCHEMA),
+                   snaps, round=round_no + 1, counts=counts,
+                   bloom_capacity=cap)
 
         # every cache the round pinned — plan_round's and the operators'
         # (global_sequence's ranked partials) — dies with the round
@@ -386,11 +371,16 @@ class CrawlDriver:
     # -- result accessors ----------------------------------------------------
 
     def schedule_df(self) -> DataFrame:
-        self._load_driver_state()
+        self._load_commit()
         return self._read_state("schedule", SCHEDULE_SCHEMA)
 
     def table(self, name: str) -> DataFrame:
-        self._load_driver_state()
-        if name not in self._snapshots:
+        """A state table as of the last commit; ``"lineage"`` is the
+        commit log's rows, (round, table, snapshot, rows) per commit."""
+        self._load_commit()
+        if name == "lineage":
+            return self.store.read(COMMIT_TABLE)
+        df = read_pinned(self.store, self._committed, name)
+        if df is None:
             raise KeyError(f"no committed snapshot for table {name!r}")
-        return self.store.read(name, self._snapshots[name])
+        return df

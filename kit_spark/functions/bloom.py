@@ -54,11 +54,6 @@ def shard_of(urls: pd.Series, shards: int) -> np.ndarray:
     return (_hash1(urls) % np.uint64(shards)).astype(np.int32)
 
 
-@F.pandas_udf(T.IntegerType())
-def _shard_udf_16(urls: pd.Series) -> pd.Series:  # pragma: no cover (bound below)
-    return pd.Series(shard_of(urls, 16))
-
-
 def make_shard_udf(shards: int):
     @F.pandas_udf(T.IntegerType())
     def shard_udf(urls: pd.Series) -> pd.Series:

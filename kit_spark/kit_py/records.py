@@ -43,11 +43,6 @@ def parse_priority(text: str) -> Optional[float]:
     return v
 
 
-def clamp_priority(v: float) -> float:
-    """``Priority::new_fallback`` (inclusion/record/priority.rs:48-50)."""
-    return max(0.0, min(1.0, v))
-
-
 DEFAULT_PRIORITY = 0.5  # Priority::AVG (inclusion/record/priority.rs:71)
 
 

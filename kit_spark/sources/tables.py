@@ -11,10 +11,16 @@ pointer.  Semantics preserved relative to Iceberg:
 * readers resolve through ``_CURRENT`` (os.replace — atomic on POSIX), so a
   crash mid-write leaves the previous snapshot current: checkpoint/resume
   reads a consistent set of tables;
-* ``history`` exposes snapshot ids for the lineage table;
+* ``history`` exposes snapshot ids;
 * bucketed layout for the url_seen table: writers pre-repartition by
   ``pmod(xxhash64(url_canon), n_buckets)`` so the per-round anti-join
   reuses a stable partitioning (Iceberg ``bucket(url_canon)`` analog).
+
+The checkpoint protocol the crawl driver, the curation stream and
+``curate_job --state-dir`` share lives here too (``read_pinned``,
+``append_pinned``, ``commit_log``): state tables are delta chains, and a
+step commits with ONE append to a commit-log table whose snapshot meta
+carries the pins (table -> snapshot).  Resume is one ``meta`` read.
 """
 
 from __future__ import annotations
@@ -54,7 +60,7 @@ def iceberg_available(spark: SparkSession) -> bool:
 
 class IcebergSnapshotStore:
     """Iceberg-backed implementation of the same narrow store API
-    (``write/read/read_or_none/exists/current_snapshot/history/meta``),
+    (``write/append/read/exists/current_snapshot/history/meta``),
     used when an iceberg-spark-runtime jar and a catalog are on the
     classpath (``snapshot_store`` picks it automatically).
 
@@ -63,7 +69,7 @@ class IcebergSnapshotStore:
     * ``write(name, df)`` -> ``writeTo(...).createOrReplace()`` — one
       atomic Iceberg snapshot commit per call; the returned id is the
       table's new ``snapshot_id`` (read back from the ``.snapshots``
-      metadata table), so lineage rows carry real Iceberg snapshot ids.
+      metadata table), so commit pins carry real Iceberg snapshot ids.
     * ``read(name, snapshot)`` -> time travel (``VERSION AS OF``).
     * ``write_bucketed`` -> hidden ``bucket(n, url_canon)`` partition
       transform, the cluster-scale analog of the parquet store's manual
@@ -107,8 +113,16 @@ class IcebergSnapshotStore:
                f"ORDER BY committed_at")
         return (sql + " DESC LIMIT 1") if latest_only else sql
 
+    @staticmethod
+    def meta_literal(value) -> str:
+        """A meta value as a SQL string literal: JSON (so ``meta`` decodes
+        ints and nested pins back), with backslashes and quotes escaped."""
+        text = json.dumps(value).replace("\\", "\\\\").replace("'", "\\'")
+        return f"'{text}'"
+
     def set_meta_sql(self, name: str, meta: dict) -> str:
-        props = ", ".join(f"'kit.meta.{k}'='{v}'" for k, v in meta.items())
+        props = ", ".join(f"'kit.meta.{k}'={self.meta_literal(v)}"
+                          for k, v in meta.items())
         return f"ALTER TABLE {self._ident(name)} SET TBLPROPERTIES ({props})"
 
     def merge_url_seen_sql(self, name: str, url_col: str, view: str) -> str:
@@ -137,8 +151,9 @@ class IcebergSnapshotStore:
             "snapshots": self.snapshots_sql("url_seen"),
             "snapshots_latest": self.snapshots_sql("url_seen",
                                                    latest_only=True),
-            "set_meta": self.set_meta_sql("url_seen",
-                                          {"round": "3", "rows": "100"}),
+            "set_meta": self.set_meta_sql("driver_state", {
+                "round": 3, "counts": {"url_seen": 100},
+                "pins": {"url_seen": "4216516472974892331"}}),
             "merge_url_seen": self.merge_url_seen_sql(
                 "url_seen", "url_canon", "__kit_merge_url_seen"),
             "time_travel": self.time_travel_sql("url_seen",
@@ -165,17 +180,25 @@ class IcebergSnapshotStore:
 
     def append(self, name: str, delta: DataFrame, meta: dict | None = None,
                parent: str | None = None) -> str:
-        """True Iceberg append — one snapshot commit containing the delta.
+        """True Iceberg append — one snapshot commit containing the delta,
+        then ``meta`` as table properties.
 
         ``parent`` is accepted for API parity with the parquet store but
         unused: Iceberg appends always chain from the table head.  Torn-
         round replay on Iceberg therefore uses ``merge_url_seen`` (insert-
         only MERGE) for the dedup-critical table and tolerates duplicate
         log rows keyed by round elsewhere — or rolls back to the pinned
-        snapshot_id first (``CALL catalog.system.rollback_to_snapshot``)."""
+        snapshot_id first (``CALL catalog.system.rollback_to_snapshot``).
+
+        Crash window: a kill between the append and the ``ALTER`` leaves
+        the rows committed under the previous meta.  For a commit log
+        (``commit_log``) that means the previous pins, so the step replays
+        from them, as after any other torn commit."""
         if not self.exists(name):
             return self.write(name, delta, meta)
         delta.writeTo(self._ident(name)).append()
+        if meta:
+            self.spark.sql(self.set_meta_sql(name, meta))
         return self._last_snapshot_id(name)
 
     def write_bucketed(self, name: str, df: DataFrame, n_buckets: int,
@@ -207,9 +230,6 @@ class IcebergSnapshotStore:
             return self.spark.table(self._ident(name))
         return self.spark.sql(self.time_travel_sql(name, snapshot))
 
-    def read_or_none(self, name: str) -> DataFrame | None:
-        return self.read(name) if self.exists(name) else None
-
     def history(self, name: str) -> list[str]:
         rows = self.spark.sql(self.snapshots_sql(name)).collect()
         return [str(r[0]) for r in rows]
@@ -221,9 +241,11 @@ class IcebergSnapshotStore:
         self.spark.sql(self.rollback_sql(name, snapshot))
 
     def meta(self, name: str, snapshot: str | None = None) -> dict:
+        if not self.exists(name):  # as the parquet store: no commit yet
+            return {}
         rows = self.spark.sql(self.show_props_sql(name)).collect()
         prefix = "kit.meta."
-        return {r["key"][len(prefix):]: r["value"] for r in rows
+        return {r["key"][len(prefix):]: json.loads(r["value"]) for r in rows
                 if r["key"].startswith(prefix)}
 
 
@@ -291,14 +313,14 @@ class SnapshotStore:
         ``delta``'s rows plus a parent pointer; readers resolve the chain.
         Keeps per-round write cost O(delta) instead of O(total) for the
         monotonically growing tables (schedule, fetch_log, url_seen,
-        robots_cache, metrics, lineage) — at the 10^10-row design point a
-        full rewrite per round would dominate the round.
+        robots_cache, metrics, driver_state) — at the 10^10-row design
+        point a full rewrite per round would dominate the round.
 
         ``parent`` defaults to the current pointer; a checkpointing caller
-        replaying a torn round MUST pass its own pinned snapshot instead
-        (the crawl driver passes driver_state's) so the replayed delta
-        chains past any orphan left by the crash — otherwise the orphan's
-        rows would be double-counted through the chain.
+        replaying a torn commit MUST chain from its last commit's pin
+        instead (``append_pinned``) so the replayed delta chains past any
+        orphan left by the crash — otherwise the orphan's rows would be
+        double-counted through the chain.
         """
         merged = dict(meta or {})
         merged["parent"] = (self.current_snapshot(name)
@@ -322,9 +344,6 @@ class SnapshotStore:
         # snapshot are invisible
         return self.spark.read.parquet(*self._chain(name, snap))
 
-    def read_or_none(self, name: str) -> DataFrame | None:
-        return self.read(name) if self.exists(name) else None
-
     def history(self, name: str) -> list[str]:
         table_dir = self._table_dir(name)
         return sorted(d for d in os.listdir(table_dir) if d.startswith("snap-"))
@@ -336,6 +355,38 @@ class SnapshotStore:
                 return json.load(fh)
         except (FileNotFoundError, TypeError):
             return {}
+
+
+def committed_pins(committed: dict) -> dict[str, str]:
+    """The pins (table -> snapshot) of a commit-log meta."""
+    return committed.get("pins", {})
+
+
+def read_pinned(store, committed: dict, name: str) -> DataFrame | None:
+    """``name`` as of the commit whose log meta is ``committed``; None
+    before its first commit.  Never the table's current pointer: orphan
+    snapshots a torn commit left behind stay invisible."""
+    snap = committed_pins(committed).get(name)
+    return store.read(name, snap) if snap else None
+
+
+def append_pinned(store, committed: dict, name: str, delta: DataFrame,
+                  meta: dict | None = None) -> str:
+    """Append ``delta`` to ``name`` chained onto its pin in ``committed``
+    (past any orphan), not onto the current pointer; returns the new
+    snapshot for the next commit's pins."""
+    return store.append(name, delta, meta=meta,
+                        parent=committed_pins(committed).get(name))
+
+
+def commit_log(store, log: str, rows: DataFrame, pins: dict[str, str],
+               **meta) -> None:
+    """The commit point: append ``rows`` to the ``log`` table with a
+    snapshot meta of ``meta`` plus ``pins``, after every state table the
+    pins name is written.  The log's pointer moves only here, so its
+    default parent is the last commit, and ``store.meta(log)`` is the
+    committed state a resume reads."""
+    store.append(log, rows, meta={**meta, "pins": pins})
 
 
 def bucketed_by_url(df: DataFrame, n_buckets: int,

@@ -1,5 +1,4 @@
-"""Structured Streaming curation pipeline (SURVEY.md §8e; the corpus
-analog of runner.run_streaming_rounds).
+"""Structured Streaming curation pipeline (SURVEY.md §8e).
 
 Documents arrive as a stream; every micro-batch runs the curation
 stages incrementally against persisted dedup state, so a corpus can be
@@ -16,19 +15,19 @@ curated as it is crawled instead of in one giant batch:
 * survivors append to the ``curated`` table.
 
 State tables live in a :class:`~kit_spark.sources.tables.SnapshotStore`
-and follow the crawl driver's exactly-once protocol: every state read
-goes through the snapshot PINNED by the last committed epoch (never the
-current pointer), every state write is a delta append chained onto that
-pin, and the epoch commits atomically by appending the metrics row —
-whose snapshot meta carries the new pins — last.  A batch retried after
-a torn epoch re-reads the pinned (pre-torn) state, re-appends its
-deltas chained PAST the orphan snapshots, and re-commits; a batch
-retried after a COMMITTED epoch is detected by the epoch watermark and
-skipped.  This is the same torn-commit recovery the crawl driver's
-driver_state table implements (kit_spark/crawl.py), applied to the
-curation state.  :func:`read_state` and :func:`commit_state` are that
-protocol's two halves; ``jobs/curate_job.py --state-dir`` commits
-through them too, one epoch per run.
+and commit through the store's one checkpoint protocol, the crawl
+driver's too (sources/tables.py ``read_pinned``/``append_pinned``/
+``commit_log``): every state read goes through the snapshot PINNED by
+the last committed epoch (never the current pointer), every state write
+is a delta append chained onto that pin, and the epoch commits by
+appending its metrics row to ``curation_metrics``, whose snapshot meta
+carries the new pins, last.  A batch retried after a torn epoch re-reads
+the pinned (pre-torn) state, re-appends its deltas chained PAST the
+orphan snapshots, and re-commits; a batch retried after a COMMITTED
+epoch is detected by the epoch watermark and skipped.
+:func:`read_state` and :func:`commit_state` are this module's two
+halves of it; ``jobs/curate_job.py --state-dir`` commits through them
+too, one epoch per run.
 
 Near-dup semantics (functions.dedup.plan_near_dup's one loser rule):
 ``band_index``/``corpus_all`` cover every doc SEEN (shipped or dropped),
@@ -51,6 +50,7 @@ from .. import lifecycle
 from ..functions import dedup as DD
 from ..functions.cleaning import c4_line_filter, redact_pii
 from ..functions.decontam import decontaminate
+from ..sources.tables import append_pinned, commit_log, read_pinned
 
 
 @dataclass(frozen=True)
@@ -75,15 +75,10 @@ def read_state(store, committed: dict):
     before its first commit.  Strictly pin-resolved: an orphan snapshot
     a torn epoch left behind is never read, exactly as crawl resume
     ignores orphans."""
-    pins = committed.get("pins", {})
-
-    def pinned(name: str) -> DataFrame | None:
-        snap = pins.get(name)
-        return store.read(name, snap) if snap else None
-
-    bands = pinned("band_index")
-    near = None if bands is None else (bands, pinned("corpus_all"))
-    return pinned("para_index"), near
+    bands = read_pinned(store, committed, "band_index")
+    near = (None if bands is None
+            else (bands, read_pinned(store, committed, "corpus_all")))
+    return read_pinned(store, committed, "para_index"), near
 
 
 def commit_state(store, committed: dict, epoch: int,
@@ -93,21 +88,15 @@ def commit_state(store, committed: dict, epoch: int,
     torn orphans), then commit the epoch by appending its metrics row,
     ``counts`` = (n_input, n_near_dup_dropped, n_shipped), last: its
     snapshot meta carries the new pins and the run identity."""
-    pins = committed.get("pins", {})
-    emeta = {"epoch": epoch}
-    new_pins = {name: store.append(name, delta, meta=emeta,
-                                   parent=pins.get(name))
+    new_pins = {name: append_pinned(store, committed, name, delta,
+                                    meta={"epoch": epoch})
                 for name, delta in deltas.items()}
-    # the metrics append IS the epoch commit point.  curation_metrics'
-    # pointer only ever moves on a completed epoch, so its default parent
-    # (the current pointer) is always the last commit
     metrics = store.spark.createDataFrame(
         [(int(epoch), *counts)],
         "epoch long, n_input long, n_near_dup_dropped long, n_shipped long")
-    commit_meta = {"epoch": epoch, "pins": new_pins}
-    if run_id is not None:
-        commit_meta["run_id"] = run_id  # checkpoint identity (see skip path)
-    store.append(COMMIT_TABLE, metrics, meta=commit_meta)
+    # run_id: the checkpoint identity (see _curate_batch's skip path)
+    ident = {} if run_id is None else {"run_id": run_id}
+    commit_log(store, COMMIT_TABLE, metrics, new_pins, epoch=epoch, **ident)
 
 
 def stream_documents(spark: SparkSession, directory: str,
@@ -121,13 +110,12 @@ def stream_documents(spark: SparkSession, directory: str,
 def curated_corpus(store, spark: SparkSession | None = None) -> DataFrame:
     """The shipped corpus as of the last COMMITTED epoch (reads through
     the commit pin, so a torn in-flight epoch is invisible)."""
-    pins = store.meta(COMMIT_TABLE).get("pins", {})
-    snap = pins.get("curated")
-    if snap is None:
+    curated = read_pinned(store, store.meta(COMMIT_TABLE), "curated")
+    if curated is None:
         sess = spark or store.spark
         return sess.createDataFrame([], "doc_id string, source string, "
                                         "text string")
-    return store.read("curated", snap)
+    return curated
 
 
 def _curate_batch(batch: DataFrame, epoch_id: int, store,

@@ -1,59 +1,21 @@
-"""Structured Streaming crawl-loop variant (M7 / SURVEY.md §2C streaming).
+"""Structured Streaming surfaces over the crawl's fetch stream (M7 /
+SURVEY.md §2C streaming).
 
-The batch driver (kit_spark.crawl) runs rounds as a driver loop; this module
-expresses the same per-round dataflow as a Structured Streaming pipeline:
+The crawl itself runs as the batch driver's round loop (kit_spark.crawl),
+which commits each round with one ``driver_state`` append.  This
+module holds the streaming formulations of per-host politeness that sit
+beside it:
 
-* candidates arrive as a stream (file source over the candidates directory,
-  or any source — rate/kafka on a real deployment);
-* each micro-batch runs admission -> robots gate -> politeness schedule via
-  ``foreachBatch`` (the reference's pull-based AutoParser loop, made
-  micro-batch: SURVEY.md §3.2), appending to the schedule sink and feeding
-  discovered candidates back through the candidates directory;
-* per-host politeness state (last-fetch slot) is carried by the url_seen /
-  frontier snapshot tables exactly as in batch — foreachBatch gives
-  exactly-once table commits per micro-batch epoch.
-
-Also provides watermarked per-host session windows over the fetch stream
-(late fetch logs tolerated up to the watermark) as the
-streaming-aggregation surface.
+* watermarked per-host session windows over the fetch stream (late fetch
+  logs tolerated up to the watermark) — the streaming-aggregation
+  surface;
+* a custom stateful operator (applyInPandasWithState) that enforces each
+  host's crawl-delay with the host's last fetch time as group state.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
-
-
-def stream_candidates(spark: SparkSession, directory: str,
-                      schema: str = "url string, priority double"):
-    """File-source candidate stream: drop candidate parquet files into
-    ``directory`` and each becomes a micro-batch."""
-    return spark.readStream.schema(schema).parquet(directory)
-
-
-def run_streaming_rounds(driver, candidate_stream: DataFrame,
-                         checkpoint_dir: str):
-    """foreachBatch bridge: every micro-batch of raw candidates runs one
-    admission+gate+schedule round through the batch driver's operators.
-
-    ``driver`` is a ``kit_spark.crawl.CrawlDriver`` whose store holds the
-    persistent url_seen/robots_cache/schedule tables.
-    """
-
-    def process(batch_df: DataFrame, epoch_id: int) -> None:
-        # write the micro-batch as this round's candidates, then run one
-        # deterministic round against the shared snapshot store
-        n = batch_df.count()
-        driver.store.write("candidates", batch_df)
-        state = driver._load_driver_state()  # noqa: SLF001
-        driver._snapshots["candidates"] = \
-            driver.store.current_snapshot("candidates")
-        driver._counts["candidates"] = n  # round inputs count via state
-        driver._run_round(state)
-
-    return (candidate_stream.writeStream
-            .foreachBatch(process)
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True))
+from pyspark.sql import DataFrame, functions as F
 
 
 def host_session_windows(fetch_log_stream: DataFrame,

@@ -134,7 +134,7 @@ def test_partial_commit_crash_recovery(spark, spark_inputs, e2e_web, oracle,
                                        tmp_path):
     """A crash mid-commit (some tables wrote new snapshots, driver_state
     did not advance) must replay the round and still match the oracle —
-    driver_state's snapshot map is the round's consistency anchor."""
+    driver_state's pins are the round's consistency anchor."""
     d1 = make_driver(spark, spark_inputs, tmp_path / "crash", max_rounds=2)
     d1.run(e2e_web.seeds)
     store = d1.store
@@ -150,6 +150,51 @@ def test_partial_commit_crash_recovery(spark, spark_inputs, e2e_web, oracle,
     assert schedule_key(d2.schedule_df()) == oracle_key(oracle)
     seen = {r["url_canon"] for r in d2.table("url_seen").collect()}
     assert seen == oracle.url_seen
+
+
+def test_torn_commit_at_the_commit_point(spark, spark_inputs, e2e_web,
+                                         oracle, tmp_path, monkeypatch):
+    """The crash ROADMAP direction 2 names: round 2 wrote every state
+    table and its driver_state snapshot, but died before that snapshot's
+    pointer swap, the round's commit point.  A fresh driver resumes from
+    round 1's commit, replays round 2 past the orphans, and matches the
+    oracle; the lineage holds each (round, table) exactly once."""
+    import os
+    from collections import Counter
+
+    class Crash(Exception):
+        pass
+
+    root = tmp_path / "torn_commit"
+    pointer = os.path.join(str(root), "driver_state", "_CURRENT")
+    real_replace = os.replace
+    swaps = []
+
+    def replace(src, dst):
+        if dst == pointer:
+            swaps.append(dst)
+            if len(swaps) == 4:  # start, round 0, round 1, then round 2
+                raise Crash
+        return real_replace(src, dst)
+
+    d1 = make_driver(spark, spark_inputs, root)
+    monkeypatch.setattr(os, "replace", replace)
+    with pytest.raises(Crash):
+        d1.run(e2e_web.seeds)
+    monkeypatch.undo()
+    assert d1.store.meta("driver_state")["round"] == 2
+    assert len(d1.store.history("driver_state")) == 4  # the orphan
+
+    d2 = make_driver(spark, spark_inputs, root)
+    d2.run()
+    assert schedule_key(d2.schedule_df()) == oracle_key(oracle)
+    seen = {r["url_canon"] for r in d2.table("url_seen").collect()}
+    assert seen == oracle.url_seen
+    lineage = Counter((r["round"], r["table"])
+                      for r in d2.table("lineage").collect())
+    assert set(lineage.values()) == {1}
+    assert {t for (rnd, t) in lineage if rnd == 2} >= {
+        "schedule", "url_seen", "frontier", "candidates", "metrics"}
 
 
 def test_run_releases_round_caches(spark, spark_inputs, e2e_web, tmp_path):

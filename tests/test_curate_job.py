@@ -140,7 +140,7 @@ def test_curate_job_incremental_equals_one_shot(spark, tmp_path):
     operator-level pair equivalence is pinned in
     tests/test_incremental_dedup.py)."""
     from jobs.curate_job import main
-    from kit_spark.sources.tables import SnapshotStore
+    from kit_spark.sources.tables import SnapshotStore, committed_pins
     from kit_spark.streaming.curation import COMMIT_TABLE
 
     a_rows, b_rows = _incremental_batches()
@@ -153,7 +153,7 @@ def test_curate_job_incremental_equals_one_shot(spark, tmp_path):
 
     counts_a = main(_job_args(dirs["wA"], dirs["A"]) + state)
     store = SnapshotStore(spark, dirs["state"])
-    pins_a = store.meta(COMMIT_TABLE)["pins"]
+    pins_a = committed_pins(store.meta(COMMIT_TABLE))
 
     def state_files(pins):
         out = {}
@@ -190,7 +190,7 @@ def test_curate_job_incremental_equals_one_shot(spark, tmp_path):
     # the next run would.  129 is dropped by near-dup itself; an exact
     # copy loses every paragraph to paragraph dedup and fails the gates
     commit = store.meta(COMMIT_TABLE)
-    pins = commit["pins"]
+    pins = committed_pins(commit)
     dropped_b = {129}
     assert commit["epoch"] == 1
     for tbl, snap in pins.items():   # B's deltas chain onto A's pins
@@ -227,7 +227,7 @@ def test_curate_job_torn_run_is_invisible(spark, tmp_path):
     from jobs.curate_job import main
     from kit_spark.functions.cleaning import redact_pii
     from kit_spark.functions.dedup import plan_paragraph_dedup
-    from kit_spark.sources.tables import SnapshotStore
+    from kit_spark.sources.tables import SnapshotStore, committed_pins
     from kit_spark.streaming.curation import (COMMIT_TABLE,
                                               CurationStreamConfig,
                                               _curate_batch)
@@ -243,7 +243,7 @@ def test_curate_job_torn_run_is_invisible(spark, tmp_path):
     # the torn run: B's paragraph keys landed, its commit row did not.
     # Read, they would knock out every paragraph of B
     torn = SnapshotStore(spark, dirs["torn"])
-    pins_a = torn.meta(COMMIT_TABLE)["pins"]
+    pins_a = committed_pins(torn.meta(COMMIT_TABLE))
     b_docs = spark.read.parquet(f"{dirs['B']}/documents.parquet")
     orphan = torn.append(
         "para_index", plan_paragraph_dedup(
@@ -257,7 +257,7 @@ def test_curate_job_torn_run_is_invisible(spark, tmp_path):
     assert _shipped(spark, dirs["wT"]) == untorn
     commit = torn.meta(COMMIT_TABLE)
     assert commit["epoch"] == 1
-    para_pin = commit["pins"]["para_index"]
+    para_pin = committed_pins(commit)["para_index"]
     assert para_pin != orphan
     assert torn.meta("para_index", para_pin)["parent"] == pins_a["para_index"]
 

@@ -67,6 +67,47 @@ def test_sql_surface_parses(spark):
                             "time_travel", "show_props", "rollback"}
     for key, sql in surface.items():
         parser.parsePlan(sql)  # raises ParseException on invalid syntax
+    # a commit-log meta carries the pins as a nested dict
+    assert "kit.meta.pins" in surface["set_meta"]
+    parser.parsePlan(store.set_meta_sql(
+        "curation_metrics", {"epoch": 1, "pins": {"para_index": "snap-00001"},
+                             "run_id": "it's"}))
+
+
+def test_meta_literal_round_trips(spark):
+    """``meta`` decodes what ``set_meta_sql`` encodes: each value goes
+    through Spark's own string-literal unescaping and back to JSON."""
+    import json
+
+    for value in (3, "snap-00001", {"pins": {"url_seen": "42"}},
+                  {"odd": "it's a \\ and a \" quote"}):
+        literal = IcebergSnapshotStore.meta_literal(value)
+        got = spark.sql(f"SELECT {literal} AS v").first()["v"]
+        assert json.loads(got) == value
+
+
+def test_append_to_existing_table_sets_meta():
+    """Runs WITHOUT the Iceberg jar: a stub session records the SQL.  An
+    append to an existing table must still apply its meta — the commit
+    log's pins ride on it."""
+    from types import SimpleNamespace
+
+    statements, appended = [], []
+
+    def sql(text):
+        statements.append(text)
+        return SimpleNamespace(collect=lambda: [(42,)])
+
+    store = IcebergSnapshotStore.__new__(IcebergSnapshotStore)
+    store.spark = SimpleNamespace(
+        sql=sql, catalog=SimpleNamespace(tableExists=lambda ident: True))
+    store.catalog, store.namespace = "local", "kit"
+    delta = SimpleNamespace(writeTo=lambda ident: SimpleNamespace(
+        append=lambda: appended.append(ident)))
+    meta = {"round": 2, "pins": {"schedule": "7"}, "counts": {"schedule": 5}}
+    assert store.append("driver_state", delta, meta=meta) == "42"
+    assert appended == ["local.kit.driver_state"]
+    assert store.set_meta_sql("driver_state", meta) in statements
 
 
 def test_sql_surface_is_what_executes(spark):

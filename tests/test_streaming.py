@@ -1,5 +1,5 @@
 """Structured Streaming surfaces: windowed aggregation via the memory sink
-and the foreachBatch crawl-round bridge."""
+and the stateful per-host politeness gate."""
 
 import pytest
 from pyspark.sql import functions as F
@@ -29,45 +29,6 @@ def test_windowed_stream_matches_batch(spark, tmp_path):
             for r in ev.groupBy(F.window("ts", "1 hour"), "event_type")
             .agg(F.count("*").alias("n")).collect()}
     assert got == want
-
-
-def test_foreachbatch_crawl_round(spark, tmp_path):
-    """A micro-batch of candidates drives one crawl round through the
-    streaming bridge, producing schedule rows in the shared store."""
-    from kit_spark.crawl import CrawlDriver, SparkCrawlConfig
-    from kit_spark.functions.images import IMAGES_SCHEMA
-    from kit_spark.sources.tables import SnapshotStore
-    from kit_spark.streaming.runner import (run_streaming_rounds,
-                                            stream_candidates)
-
-    store = SnapshotStore(spark, str(tmp_path / "store"))
-    images = spark.createDataFrame([], IMAGES_SCHEMA)
-    robots = spark.createDataFrame(
-        [("https://s.test:443", "redirect", None)],
-        "host_key string, access_state string, body binary")
-    sitemaps = spark.createDataFrame([], "sitemap_url string, body string")
-    links = spark.createDataFrame([], "src_url string, dst_url string")
-    driver = CrawlDriver(spark, store, images, robots, sitemaps, links,
-                         SparkCrawlConfig(max_rounds=5))
-    driver.start([])  # initialize empty state
-
-    cand_dir = str(tmp_path / "cands")
-    spark.createDataFrame(
-        [(f"https://s.test/p{i}", 0.5) for i in range(6)],
-        "url string, priority double").write.parquet(cand_dir)
-
-    stream = stream_candidates(spark, cand_dir)
-    writer = run_streaming_rounds(driver, stream,
-                                  str(tmp_path / "ckpt"))
-    q = writer.start()
-    try:
-        q.awaitTermination(120)
-    finally:
-        if q.isActive:
-            q.stop()
-    schedule = driver.schedule_df().collect()
-    assert {r["url_canon"] for r in schedule} == {
-        f"https://s.test/p{i}" for i in range(6)}
 
 
 def test_politeness_state_stream(spark, tmp_path):
