@@ -5,9 +5,10 @@ The driver's verify runs ``entry(spark)`` as a smoke check, runs each
 ``oracle_sql()[name]`` via DuckDB (row-count + schema + order-insensitive
 value-hash -> CORRECTNESS_r{N}.json).
 
-The catalog lives in ``kit_spark.queries`` (exactly 50 entries — the
-driver's gate checks at most 50 — 44 with DuckDB oracles: relational
-coverage, crawl-engine slices incl. both robots-gate formulations,
+The catalog lives in ``kit_spark.queries`` (49 entries — the driver's
+gate checks at most 50 — 43 with DuckDB oracles: relational
+coverage, crawl-engine slices (canonicalization, admission, the robots
+gate, politeness, the composed frontier round),
 training-data dedup/text/similarity/ANN, sequence packing (the
 distributed cumsum vs the naive single-partition SUM() OVER form)
 and both composed cleaning

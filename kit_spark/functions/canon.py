@@ -7,8 +7,10 @@ canonical ASCII http(s) URLs, detected with one pandas ``str.fullmatch``
 Only the messy minority (uppercase hosts, default ports, dot segments,
 percent-encoding, userinfo, backslashes...) drops to the per-element kernel.
 
-Output is a single struct column so one UDF invocation yields url_canon,
-host_key and match_path together (one Arrow round-trip, not three).
+The UDF returns only ``url_canon``.  ``host_key`` and ``match_path`` are
+derived from the canonical form JVM-side by ``derive_host_and_path`` (one
+regex, no Python), so the catalog's ``with_canon`` and the crawl's
+admission share one derivation.
 """
 
 from __future__ import annotations
@@ -16,13 +18,7 @@ from __future__ import annotations
 import pandas as pd
 from pyspark.sql import functions as F, types as T
 
-from kit_spark.kit_py.urls import DEFAULT_PORTS, parse_url
-
-CANON_STRUCT = T.StructType([
-    T.StructField("url_canon", T.StringType()),
-    T.StructField("host_key", T.StringType()),
-    T.StructField("match_path", T.StringType()),
-])
+from kit_spark.kit_py.urls import parse_url
 
 # Already-canonical fast path: lowercase scheme+host, no default port, no
 # userinfo, no %/\\ tricks, no dot segments, printable ASCII path/query.
@@ -77,29 +73,6 @@ def canonical_series(urls: pd.Series) -> pd.Series:
     return canon
 
 
-def canonicalize_batch(urls: pd.Series) -> pd.DataFrame:
-    """pd.Series[str] -> DataFrame(url_canon, host_key, match_path).
-
-    Invalid/non-http(s) URLs yield nulls in all three fields.
-    """
-    canon = canonical_series(urls)
-    extracted = canon.str.extract(
-        r"^(https?)://(?:[^/@]*@)?([^/:?#]+)(?::([0-9]+))?(/.*)?$")
-    scheme, host, port, rest = (extracted[i] for i in range(4))
-    eff_port = port.fillna(scheme.map(lambda s: str(DEFAULT_PORTS.get(s, ""))
-                                      if isinstance(s, str) else None))
-    host_key = scheme + "://" + host + ":" + eff_port
-    match_path = rest.fillna("/")
-    bad = canon.isna() | scheme.isna()
-    host_key[bad] = None
-    match_path[bad] = None
-    return pd.DataFrame({
-        "url_canon": canon.where(~bad, None),
-        "host_key": host_key,
-        "match_path": match_path,
-    })
-
-
 def _slow_canon(u) -> str | None:
     if not isinstance(u, str):
         return None
@@ -109,57 +82,53 @@ def _slow_canon(u) -> str | None:
     return parsed.canonical()
 
 
-@F.pandas_udf(CANON_STRUCT)
-def _canonicalize_udf_raw(urls: pd.Series) -> pd.DataFrame:
-    return canonicalize_batch(urls)
-
-
 @F.pandas_udf(T.StringType())
 def _canon_url_udf_raw(urls: pd.Series) -> pd.Series:
     return canonical_series(urls)
 
 
-# Both canon UDFs are marked non-deterministic (they are in fact pure) so
-# the optimizer never duplicates them around a pushed-down filter: a
-# filter or join condition on the UDF's *output* (isnotnull(url_canon),
-# the robots-gate host_key equi-join) otherwise plants a second
-# ArrowEvalPython below the filter and every row pays the kernel twice —
-# the guide §4.4 pattern, observed as 2x canon nodes per branch in the
-# round-6 before-plans (plans/r06/*_before.txt).  Callers that filter on
-# *input* columns (doc_id slices) apply the filter before the UDF call,
-# so no pushdown is lost.
-canonicalize_udf = _canonicalize_udf_raw.asNondeterministic()
-
-#: url_canon only — the admission hot path (host_key/match_path are
-#: derived JVM-side after dedup, see derive_host_and_path).
+# The canon UDF is marked non-deterministic (it is in fact pure) so the
+# optimizer never duplicates it around a pushed-down filter: a filter or
+# join condition on its *output* (isnotnull(url_canon), the columns
+# derive_host_and_path computes from it, the robots-gate host_key
+# equi-join) otherwise plants a second ArrowEvalPython below the filter
+# and every row pays the kernel twice — the guide §4.4 pattern, observed
+# as 2x canon nodes per branch in the round-6 before-plans
+# (plans/r06/*_before.txt).  Callers that filter on *input* columns
+# (doc_id slices) apply the filter before the UDF call, so no pushdown is
+# lost.
 canon_url_udf = _canon_url_udf_raw.asNondeterministic()
 
 
 def with_canon(df, url_col: str = "url"):
     """Append url_canon/host_key/match_path columns (one UDF call)."""
-    out = df.withColumn("__c", canonicalize_udf(F.col(url_col)))
-    return (out.withColumn("url_canon", F.col("__c.url_canon"))
-               .withColumn("host_key", F.col("__c.host_key"))
-               .withColumn("match_path", F.col("__c.match_path"))
-               .drop("__c"))
+    return derive_host_and_path(
+        df.withColumn("url_canon", canon_url_udf(F.col(url_col))))
+
+
+# scheme, optional userinfo, bracketed IPv6 or plain host, optional port,
+# and the rest (path, query, fragment) as the robots match path
+_URL_PARTS = (r"(?s)^(https?)://(?:[^/@]*@)?(\[[^\]]*\]|[^/:?#]+)"
+              r"(?::([0-9]+))?(/.*)$")
 
 
 def derive_host_and_path(df, url_col: str = "url_canon"):
     """JVM-side (no UDF) host_key/match_path from an already-*canonical* URL.
 
-    Equivalent to the canonicalize UDF's outputs for canonical forms; used
-    after dedup so shuffles carry only (url_canon, priority) and the derived
-    columns are recomputed cheaply by codegen instead of being shuffled.
+    One regex over the canonical form, the kernel's ``url_host_key`` and
+    ``match_path()`` exactly (IPv6 hosts stay bracketed).  No
+    ``parse_url``: Spark's goes through ``java.net.URI``, which under ANSI
+    raises on characters the kernel keeps in canonical URLs (``|``,
+    ``^``, ``[``, ``]``, a malformed ``%`` escape).  A null or
+    non-matching URL yields null for both.  Admission calls it after
+    dedup, so shuffles carry only (url_canon, priority).
     """
     url = F.col(url_col)
-    proto = F.parse_url(url, F.lit("PROTOCOL"))
-    host = F.parse_url(url, F.lit("HOST"))
-    authority = F.parse_url(url, F.lit("AUTHORITY"))
-    port = F.nullif(F.regexp_extract(authority, r":([0-9]+)$", 1), F.lit(""))
-    eff_port = F.coalesce(port, F.when(proto == "https", F.lit("443"))
-                          .otherwise(F.lit("80")))
-    return (df.withColumn("host_key",
-                          F.concat(proto, F.lit("://"), host, F.lit(":"),
-                                   eff_port))
-            .withColumn("match_path",
-                        F.regexp_replace(url, r"^[a-z]+://[^/]*", "")))
+    scheme, host, port, path = (F.regexp_extract(url, _URL_PARTS, i)
+                                for i in range(1, 5))
+    matched = path != ""  # the path group is never empty in a match
+    eff_port = (F.when(port != "", port)
+                .when(scheme == "https", F.lit("443")).otherwise(F.lit("80")))
+    return (df.withColumn("host_key", F.when(matched, F.concat(
+                scheme, F.lit("://"), host, F.lit(":"), eff_port)))
+            .withColumn("match_path", F.when(matched, path)))

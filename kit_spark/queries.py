@@ -617,53 +617,19 @@ SELECT url_canon, match_path,
 FROM canon
 """))
 def robots_gate(spark, sf_dir):
-    """D5/P9: the real compile+match UDFs on a fixed ruleset; the oracle
-    hand-encodes the longest-match precedence for that exact ruleset.
-    Rule order after compile-sort: /doc/12 (allow), /doc/1 (disallow),
-    /*4$ (disallow)."""
-    from kit_spark.functions.canon import with_canon
-    from kit_spark.functions.robots_udfs import gate_allowed, make_compile_udf
-
-    # canon feeds the hosts-distinct branch, the gate join's probe side
-    # AND both arms of gate_allowed's fast/slow union — persist it so the
-    # UDF runs once (the round-6 before-plan showed 4 ArrowEvalPython
-    # re-evaluations of this subtree); released when the next entry runs
-    canon = _persist(with_canon(_messy_urls(spark, sf_dir), "url"))
-    hosts = canon.select("host_key").distinct() \
-        .withColumn("access_state", F.lit("successful")) \
-        .withColumn("body", F.lit(_GATE_ROBOTS))
-    compiled = hosts.withColumn(
-        "__r", make_compile_udf("kitbot")(F.col("access_state"),
-                                          F.col("body"))) \
-        .select("host_key", F.col("__r.always").alias("always"),
-                F.col("__r.rules").alias("rules"))
-    gated = gate_allowed(canon.join(compiled, "host_key"))
-    return gated.select("url_canon", "match_path", "allowed")
-
-
-@query("robots_gate_relational", oracle=_sql("""
-WITH canon AS ({CANON})
-SELECT url_canon, match_path,
-       CASE
-         WHEN match_path LIKE '/doc/12%' THEN TRUE        -- Allow /doc/12 (len 7)
-         WHEN match_path LIKE '/doc/1%' THEN FALSE        -- Disallow /doc/1 (len 6)
-         WHEN match_path LIKE '%4' THEN FALSE             -- Disallow /*4$ (len 4)
-         ELSE TRUE                                        -- no match -> allow
-       END AS allowed
-FROM canon
-"""))
-def robots_gate_relational(spark, sf_dir):
-    """D5/P9 via the ZERO-Python relational gate (higher-order array
-    functions, whole-stage codegen — functions/robots_udfs.py
-    gate_allowed_relational): same ruleset and oracle as robots_gate, so
-    the two gate formulations are pinned to identical semantics by the
-    driver itself."""
+    """D5/P9: the real compile UDF and the crawl's relational gate
+    (higher-order array functions, no Python) on a fixed ruleset; the
+    oracle hand-encodes the longest-match precedence for that exact
+    ruleset.  Rule order after compile-sort: /doc/12 (allow), /doc/1
+    (disallow), /*4$ (disallow)."""
     from kit_spark.functions.canon import with_canon
     from kit_spark.functions.robots_udfs import (gate_allowed_relational,
                                                  make_compile_udf)
 
-    # same single-UDF-pass persist as robots_gate (the relational gate
-    # has no union split, but the hosts branch re-evaluated canon too)
+    # canon feeds the hosts-distinct branch and the gate join's probe
+    # side — persist it so the canon UDF runs once (the round-6
+    # before-plan showed 4 ArrowEvalPython re-evaluations of this
+    # subtree); released when the next entry runs
     canon = _persist(with_canon(_messy_urls(spark, sf_dir), "url"))
     hosts = canon.select("host_key").distinct() \
         .withColumn("access_state", F.lit("successful")) \

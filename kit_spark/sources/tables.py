@@ -68,17 +68,15 @@ class IcebergSnapshotStore:
 
     * ``write(name, df)`` -> ``writeTo(...).createOrReplace()`` — one
       atomic Iceberg snapshot commit per call; the returned id is the
-      table's new ``snapshot_id`` (read back from the ``.snapshots``
+      table's new head ``snapshot_id`` (read back from the ``.refs``
       metadata table), so commit pins carry real Iceberg snapshot ids.
+    * ``append(name, delta, parent=...)`` -> an Iceberg append chained
+      as the parquet store chains its deltas: on the table head by
+      default, on a new table for ``parent=None``, and on an older
+      snapshot after rolling the head back to it
+      (``rollback_to_snapshot``) — so a round replayed after a torn
+      commit appends past the orphan instead of on top of it.
     * ``read(name, snapshot)`` -> time travel (``VERSION AS OF``).
-    * ``write_bucketed`` -> hidden ``bucket(n, url_canon)`` partition
-      transform, the cluster-scale analog of the parquet store's manual
-      ``pmod(xxhash64(url_canon), n)`` layout: the per-round url_seen
-      anti-join co-locates on the bucket without a user-visible column.
-    * ``merge_url_seen`` -> ``MERGE INTO ... WHEN NOT MATCHED THEN
-      INSERT`` — the idempotent commit the crawl driver uses on resume
-      (re-running a torn round re-merges the same admitted set with no
-      duplicate rows), replacing the fallback's rewrite-the-union commit.
 
     The execution paths need an Iceberg jar (tests/test_iceberg_store.py
     runs them when one is present; the sandbox ships none), but every SQL
@@ -108,10 +106,15 @@ class IcebergSnapshotStore:
         return (f"CREATE NAMESPACE IF NOT EXISTS "
                 f"{self.catalog}.{self.namespace}")
 
-    def snapshots_sql(self, name: str, latest_only: bool = False) -> str:
-        sql = (f"SELECT snapshot_id FROM {self._ident(name)}.snapshots "
-               f"ORDER BY committed_at")
-        return (sql + " DESC LIMIT 1") if latest_only else sql
+    def snapshots_sql(self, name: str) -> str:
+        return (f"SELECT snapshot_id FROM {self._ident(name)}.snapshots "
+                f"ORDER BY committed_at")
+
+    def current_snapshot_sql(self, name: str) -> str:
+        """The table head: the ``main`` branch's snapshot, which after a
+        rollback is older than the newest committed snapshot."""
+        return (f"SELECT snapshot_id FROM {self._ident(name)}.refs "
+                f"WHERE name = 'main'")
 
     @staticmethod
     def meta_literal(value) -> str:
@@ -125,11 +128,6 @@ class IcebergSnapshotStore:
                           for k, v in meta.items())
         return f"ALTER TABLE {self._ident(name)} SET TBLPROPERTIES ({props})"
 
-    def merge_url_seen_sql(self, name: str, url_col: str, view: str) -> str:
-        return (f"MERGE INTO {self._ident(name)} t "
-                f"USING {view} s ON t.{url_col} = s.{url_col} "
-                f"WHEN NOT MATCHED THEN INSERT *")
-
     def time_travel_sql(self, name: str, snapshot: str) -> str:
         return f"SELECT * FROM {self._ident(name)} VERSION AS OF {snapshot}"
 
@@ -137,9 +135,9 @@ class IcebergSnapshotStore:
         return f"SHOW TBLPROPERTIES {self._ident(name)}"
 
     def rollback_sql(self, name: str, snapshot: str) -> str:
-        """Torn-round recovery: roll the table head back to the pinned
-        snapshot before replaying (an Iceberg stored procedure; needs the
-        Iceberg SQL extensions on a real cluster)."""
+        """Roll the table head back to ``snapshot`` before an append
+        chained on it (an Iceberg stored procedure; needs the Iceberg SQL
+        extensions on a real cluster)."""
         return (f"CALL {self.catalog}.system.rollback_to_snapshot"
                 f"('{self.namespace}.{name}', {snapshot})")
 
@@ -149,13 +147,10 @@ class IcebergSnapshotStore:
         return {
             "create_namespace": self.create_namespace_sql(),
             "snapshots": self.snapshots_sql("url_seen"),
-            "snapshots_latest": self.snapshots_sql("url_seen",
-                                                   latest_only=True),
+            "current_snapshot": self.current_snapshot_sql("url_seen"),
             "set_meta": self.set_meta_sql("driver_state", {
                 "round": 3, "counts": {"url_seen": 100},
                 "pins": {"url_seen": "4216516472974892331"}}),
-            "merge_url_seen": self.merge_url_seen_sql(
-                "url_seen", "url_canon", "__kit_merge_url_seen"),
             "time_travel": self.time_travel_sql("url_seen",
                                                 "4216516472974892331"),
             "show_props": self.show_props_sql("url_seen"),
@@ -164,9 +159,8 @@ class IcebergSnapshotStore:
 
     # --- execution ---------------------------------------------------------
 
-    def _last_snapshot_id(self, name: str) -> str:
-        row = self.spark.sql(self.snapshots_sql(name,
-                                                latest_only=True)).collect()
+    def _head(self, name: str) -> str:
+        row = self.spark.sql(self.current_snapshot_sql(name)).collect()
         return str(row[0][0])
 
     def write(self, name: str, df: DataFrame,
@@ -176,54 +170,39 @@ class IcebergSnapshotStore:
             .createOrReplace()
         if meta:
             self.spark.sql(self.set_meta_sql(name, meta))
-        return self._last_snapshot_id(name)
+        return self._head(name)
+
+    _CURRENT_PARENT = "__current__"
 
     def append(self, name: str, delta: DataFrame, meta: dict | None = None,
-               parent: str | None = None) -> str:
+               parent: str | None = _CURRENT_PARENT) -> str:
         """True Iceberg append — one snapshot commit containing the delta,
         then ``meta`` as table properties.
 
-        ``parent`` is accepted for API parity with the parquet store but
-        unused: Iceberg appends always chain from the table head.  Torn-
-        round replay on Iceberg therefore uses ``merge_url_seen`` (insert-
-        only MERGE) for the dedup-critical table and tolerates duplicate
-        log rows keyed by round elsewhere — or rolls back to the pinned
-        snapshot_id first (``CALL catalog.system.rollback_to_snapshot``).
+        ``parent`` has the parquet store's meaning: by default the delta
+        chains on the table head; ``None`` starts a new chain (the table
+        is replaced by the delta); any other snapshot first becomes the
+        head again (``rollback_sql``), so the snapshots a torn commit
+        left past it drop out of the table, and the delta chains on it.
 
         Crash window: a kill between the append and the ``ALTER`` leaves
         the rows committed under the previous meta.  For a commit log
         (``commit_log``) that means the previous pins, so the step replays
         from them, as after any other torn commit."""
-        if not self.exists(name):
+        if parent is None or not self.exists(name):
             return self.write(name, delta, meta)
+        if parent != self._CURRENT_PARENT and parent != self._head(name):
+            self.spark.sql(self.rollback_sql(name, parent))
         delta.writeTo(self._ident(name)).append()
         if meta:
             self.spark.sql(self.set_meta_sql(name, meta))
-        return self._last_snapshot_id(name)
-
-    def write_bucketed(self, name: str, df: DataFrame, n_buckets: int,
-                       bucket_col: str = "url_canon") -> str:
-        ident = self._ident(name)
-        df.writeTo(ident).using("iceberg") \
-            .partitionedBy(F.bucket(n_buckets, bucket_col)) \
-            .createOrReplace()
-        return self._last_snapshot_id(name)
-
-    def merge_url_seen(self, admitted: DataFrame, name: str = "url_seen",
-                       url_col: str = "url_canon") -> str:
-        """Idempotent url_seen commit: insert-only MERGE keyed on the
-        canonical URL (safe to replay after a torn round)."""
-        view = f"__kit_merge_{name}"
-        admitted.select(url_col).createOrReplaceTempView(view)
-        self.spark.sql(self.merge_url_seen_sql(name, url_col, view))
-        self.spark.catalog.dropTempView(view)
-        return self._last_snapshot_id(name)
+        return self._head(name)
 
     def exists(self, name: str) -> bool:
         return self.spark.catalog.tableExists(self._ident(name))
 
     def current_snapshot(self, name: str) -> str | None:
-        return self._last_snapshot_id(name) if self.exists(name) else None
+        return self._head(name) if self.exists(name) else None
 
     def read(self, name: str, snapshot: str | None = None) -> DataFrame:
         if snapshot is None:
@@ -233,12 +212,6 @@ class IcebergSnapshotStore:
     def history(self, name: str) -> list[str]:
         rows = self.spark.sql(self.snapshots_sql(name)).collect()
         return [str(r[0]) for r in rows]
-
-    def rollback_to_snapshot(self, name: str, snapshot: str) -> None:
-        """Roll the table head back to ``snapshot`` (torn-round recovery
-        path documented in ``append``); requires the Iceberg SQL
-        extensions (procedure syntax) on the cluster."""
-        self.spark.sql(self.rollback_sql(name, snapshot))
 
     def meta(self, name: str, snapshot: str | None = None) -> dict:
         if not self.exists(name):  # as the parquet store: no commit yet
@@ -396,21 +369,3 @@ def bucketed_by_url(df: DataFrame, n_buckets: int,
     return df.repartition(n_buckets, F.pmod(F.xxhash64(url_col),
                                             F.lit(n_buckets)))
 
-
-def read_robots_dir(spark: SparkSession, directory: str) -> DataFrame:
-    """S2: robots.txt bodies from files — ``binaryFile`` source, one row per
-    file: (host_key from the file name 'scheme_host_port.txt', access_state
-    'successful', body).  The fetched-bytes column path (S1) is the usual
-    production shape; this covers file-drop deployments and tests."""
-    files = spark.read.format("binaryFile").load(f"{directory}/*.txt")
-    name = F.regexp_extract(F.element_at(F.split("path", "/"), -1),
-                            r"(.+)\.txt$", 1)
-    # file-name convention: <scheme>_<host>_<port>.txt
-    host_key = F.regexp_replace(name, r"^([a-z]+)_(.+)_([0-9]+)$",
-                                r"$1://$2:$3")
-    return files.select(
-        host_key.alias("host_key"),
-        F.lit("successful").alias("access_state"),
-        F.col("content").alias("body"),
-        F.col("length").alias("body_bytes"),  # countio S15 analog
-    )

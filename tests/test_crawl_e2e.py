@@ -233,3 +233,24 @@ def test_degenerate_seeds_commit_one_empty_round(spark, spark_inputs,
     assert [(m["round"], m["admitted"], m["scheduled"]) for m in metrics] \
         == [(0, 0, 0)]
     assert driver.schedule_df().count() == 0
+
+
+def test_uri_hostile_seeds_crawl_like_the_oracle(spark, spark_inputs,
+                                                 e2e_web, tmp_path):
+    """Canonical URLs that ``java.net.URI`` rejects (``[]``, ``|``, ``^``,
+    a malformed ``%`` escape) and a bracketed IPv6 host are admitted,
+    scheduled and fetched as the oracle crawler does: no round fails on
+    them."""
+    seeds = list(e2e_web.seeds[:4]) + [
+        "https://h0.example.com/list?ids[]=1&q=a|b",
+        "https://h1.example.com/a^b", "https://h0.example.com/%zz",
+        "https://[::1]:8080/x"]
+    driver = make_driver(spark, spark_inputs, tmp_path / "hostile",
+                         max_rounds=3)
+    driver.run(seeds)
+    want = crawl(seeds, e2e_web.web, CrawlConfig(
+        user_agent="kitbot", round_seconds=ROUND_SECONDS,
+        default_delay=10.0, max_rounds=3, optimal=True))
+    assert schedule_key(driver.schedule_df()) == oracle_key(want)
+    seen = {r["url_canon"] for r in driver.table("url_seen").collect()}
+    assert seen == want.url_seen

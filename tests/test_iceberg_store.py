@@ -31,40 +31,38 @@ def test_write_read_history_roundtrip(iceberg_store, spark):
     assert iceberg_store.history("t1")[-1] == snap2
 
 
-def test_bucketed_url_seen_and_idempotent_merge(iceberg_store, spark):
-    seen = spark.createDataFrame(
-        [(f"https://h{i % 3}.test/u{i}",) for i in range(100)],
-        "url_canon string")
-    iceberg_store.write_bucketed("url_seen_t", seen, n_buckets=4)
-    newer = spark.createDataFrame(
-        [(f"https://h{i % 3}.test/u{i}",) for i in range(50, 150)],
-        "url_canon string")
-    iceberg_store.merge_url_seen(newer, name="url_seen_t")
-    assert iceberg_store.read("url_seen_t").count() == 150
-    # replaying the same merge (torn-round resume) must not duplicate
-    iceberg_store.merge_url_seen(newer, name="url_seen_t")
-    assert iceberg_store.read("url_seen_t").count() == 150
-    # hidden bucket partitioning visible in the files metadata table
-    files = spark.sql(
-        f"SELECT partition FROM {iceberg_store._ident('url_seen_t')}.files"
-    ).collect()
-    assert len(files) >= 1
+def test_replay_over_an_orphan_appends_once(iceberg_store, spark):
+    """A round replayed after a torn commit chains its delta on the
+    commit's pin, not on the orphan the crash left at the head: the
+    replayed rows land once, and the orphan's rows drop out."""
+    rows = spark.createDataFrame([(1, "a"), (2, "b")], "id long, v string")
+    pin = iceberg_store.write("t_replay", rows)
+    delta = spark.createDataFrame([(3, "c")], "id long, v string")
+    orphan = iceberg_store.append("t_replay", delta)  # the torn commit
+    assert orphan != pin
+    head = iceberg_store.append("t_replay", delta, parent=pin)
+    assert iceberg_store.current_snapshot("t_replay") == head
+    assert sorted(r["id"] for r in iceberg_store.read("t_replay").collect()) \
+        == [1, 2, 3]
+    # parent=None starts a new chain: the table holds the delta alone
+    iceberg_store.append("t_replay", delta, parent=None)
+    assert iceberg_store.read("t_replay").count() == 1
 
 
 def test_sql_surface_parses(spark):
     """Pure-metadata dry check, runs WITHOUT the Iceberg jar: every SQL
     statement the store can issue must parse under Spark's SQL parser.
     Catches drift between the store's string builders and Spark's grammar
-    (MERGE INTO, VERSION AS OF time travel, metadata tables, TBLPROPERTIES,
-    CALL procedure syntax) even though execution needs a real catalog."""
+    (VERSION AS OF time travel, metadata tables, TBLPROPERTIES, CALL
+    procedure syntax) even though execution needs a real catalog."""
     store = IcebergSnapshotStore.__new__(IcebergSnapshotStore)  # no catalog:
     store.spark = spark                      # skip __init__'s CREATE NAMESPACE
     store.catalog, store.namespace = "local", "kit"
     parser = spark._jsparkSession.sessionState().sqlParser()  # noqa: SLF001
     surface = store.sql_surface()
     assert set(surface) == {"create_namespace", "snapshots",
-                            "snapshots_latest", "set_meta", "merge_url_seen",
-                            "time_travel", "show_props", "rollback"}
+                            "current_snapshot", "set_meta", "time_travel",
+                            "show_props", "rollback"}
     for key, sql in surface.items():
         parser.parsePlan(sql)  # raises ParseException on invalid syntax
     # a commit-log meta carries the pins as a nested dict
@@ -87,27 +85,59 @@ def test_meta_literal_round_trips(spark):
 
 
 def test_append_to_existing_table_sets_meta():
-    """Runs WITHOUT the Iceberg jar: a stub session records the SQL.  An
-    append to an existing table must still apply its meta — the commit
-    log's pins ride on it."""
+    """Runs WITHOUT the Iceberg jar: a stub session records the SQL and
+    the writes in one event list.  An append to an existing table must
+    still apply its meta — the commit log's pins ride on it — and honour
+    ``parent`` as the parquet store does: the head (default or named)
+    appends, an older snapshot is rolled back to before the append, and
+    ``None`` replaces the table with the delta."""
     from types import SimpleNamespace
 
-    statements, appended = [], []
+    events = []
 
     def sql(text):
-        statements.append(text)
-        return SimpleNamespace(collect=lambda: [(42,)])
+        events.append(text)
+        return SimpleNamespace(collect=lambda: [(42,)])  # the head is 42
+
+    class Writer:
+        def __init__(self, ident):
+            self.ident = ident
+
+        def append(self):
+            events.append(("append", self.ident))
+
+        def using(self, _):
+            return self
+
+        def tableProperty(self, *_):
+            return self
+
+        def createOrReplace(self):
+            events.append(("replace", self.ident))
 
     store = IcebergSnapshotStore.__new__(IcebergSnapshotStore)
     store.spark = SimpleNamespace(
         sql=sql, catalog=SimpleNamespace(tableExists=lambda ident: True))
     store.catalog, store.namespace = "local", "kit"
-    delta = SimpleNamespace(writeTo=lambda ident: SimpleNamespace(
-        append=lambda: appended.append(ident)))
+    delta = SimpleNamespace(writeTo=Writer)
     meta = {"round": 2, "pins": {"schedule": "7"}, "counts": {"schedule": 5}}
-    assert store.append("driver_state", delta, meta=meta) == "42"
-    assert appended == ["local.kit.driver_state"]
-    assert store.set_meta_sql("driver_state", meta) in statements
+    ident = "local.kit.driver_state"
+    set_meta = store.set_meta_sql("driver_state", meta)
+    rollback = store.rollback_sql("driver_state", "7")
+    for parent in ({}, {"parent": "42"}):
+        events.clear()
+        assert store.append("driver_state", delta, meta=meta, **parent) \
+            == "42"
+        assert ("append", ident) in events and set_meta in events
+        assert rollback not in events
+    events.clear()
+    store.append("driver_state", delta, meta=meta, parent="7")
+    assert events.index(rollback) < events.index(("append", ident))
+    assert set_meta in events
+    events.clear()
+    store.append("driver_state", delta, meta=meta, parent=None)
+    assert ("replace", ident) in events and ("append", ident) not in events
+    assert rollback not in events and set_meta in events
 
 
 def test_sql_surface_is_what_executes(spark):

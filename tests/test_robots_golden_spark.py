@@ -1,24 +1,22 @@
 """The golden robots corpus evaluated THROUGH the engine's DataFrame path
 (SURVEY.md §5): each case becomes a row in a robots_docs/candidates fixture,
-compiled by the robots-compile UDF and gated by the distributed gate join —
-not just the Python kernel."""
+compiled by the robots-compile UDF and gated by the relational gate join
+the crawl runs — not just the Python kernel."""
 
 import pytest
 from pyspark.sql import functions as F
 
-from kit_spark.functions.robots_udfs import (gate_allowed,
-                                             gate_allowed_relational,
+from kit_spark.functions.robots_udfs import (gate_allowed_relational,
                                              make_compile_udf)
 from kit_spark.kit_py.robots import normalize_path
 from tests.test_robots_kernel import (AGENT_CASES, AGENT_TXT, MATCH_CASES,
                                       PRECEDENCE_CASES)
 
 
-def run_gate(spark, docs, candidates, user_agent, relational=False):
+def run_gate(spark, docs, candidates, user_agent):
     """docs: [(host_key, body bytes)]; candidates: [(host_key, path)] ->
-    {(host_key, path): allowed} via compile UDF + gate join — either the
-    vectorized-UDF gate or the pure-Catalyst relational gate (which takes
-    pre-normalized paths per its contract and must agree everywhere)."""
+    {(host_key, path): allowed} via compile UDF + the relational gate
+    join, each raw path normalized first as the gate's contract asks."""
     docs_df = spark.createDataFrame(docs, "host_key string, body binary") \
         .withColumn("access_state", F.lit("successful"))
     compiled = docs_df.withColumn(
@@ -26,23 +24,15 @@ def run_gate(spark, docs, candidates, user_agent, relational=False):
                                             F.col("body"))) \
         .select("host_key", F.col("__r.always").alias("always"),
                 F.col("__r.rules").alias("rules"))
-    if relational:
-        cand_df = spark.createDataFrame(
-            [(h, p, normalize_path(p)) for h, p in candidates],
-            "host_key string, raw string, match_path string")
-        gated = gate_allowed_relational(
-            cand_df.join(F.broadcast(compiled), "host_key"))
-        return {(r["host_key"], r["raw"]): r["allowed"]
-                for r in gated.collect()}
-    cand_df = spark.createDataFrame(candidates,
-                                    "host_key string, match_path string")
-    gated = gate_allowed(cand_df.join(F.broadcast(compiled), "host_key"))
-    return {(r["host_key"], r["match_path"]): r["allowed"]
-            for r in gated.collect()}
+    cand_df = spark.createDataFrame(
+        [(h, p, normalize_path(p)) for h, p in candidates],
+        "host_key string, raw string, match_path string")
+    gated = gate_allowed_relational(
+        cand_df.join(F.broadcast(compiled), "host_key"))
+    return {(r["host_key"], r["raw"]): r["allowed"] for r in gated.collect()}
 
 
-@pytest.mark.parametrize("relational", [False, True])
-def test_google_match_table_through_dataframes(spark, relational):
+def test_google_match_table_through_dataframes(spark):
     # one host per distinct pattern; Disallow-form so "matched" == denied
     docs, candidates, expect = [], [], {}
     patterns = sorted({p for p, _, _ in MATCH_CASES})
@@ -55,19 +45,18 @@ def test_google_match_table_through_dataframes(spark, relational):
         candidates.append((host, path))
         # rule matched -> disallowed; no match -> allowed
         expect[(host, path)] = not matches
-    got = run_gate(spark, docs, candidates, "kitbot", relational)
+    got = run_gate(spark, docs, candidates, "kitbot")
     assert got == expect
 
 
-@pytest.mark.parametrize("relational", [False, True])
-def test_precedence_table_through_dataframes(spark, relational):
+def test_precedence_table_through_dataframes(spark):
     docs, candidates, expect = [], [], {}
     for i, (txt, path, allowed) in enumerate(PRECEDENCE_CASES):
         host = f"https://p{i}.test:443"
         docs.append((host, txt))
         candidates.append((host, path))
         expect[(host, path)] = allowed
-    got = run_gate(spark, docs, candidates, "*", relational)
+    got = run_gate(spark, docs, candidates, "*")
     assert got == expect
 
 

@@ -103,11 +103,10 @@ def test_percent_encoded_hosts_decoded():
 def test_idn_through_canon_udf_batch():
     import pandas as pd
 
-    from kit_spark.functions.canon import canonicalize_batch
+    from kit_spark.functions.canon import canonical_series
 
-    out = canonicalize_batch(pd.Series(["https://bücher.de/x"]))
-    assert out["url_canon"][0] == "https://xn--bcher-kva.de/x"
-    assert out["host_key"][0] == "https://xn--bcher-kva.de:443"
+    out = canonical_series(pd.Series(["https://bücher.de/x"]))
+    assert out[0] == "https://xn--bcher-kva.de/x"
 
 
 def test_uts46_deviation_and_edge_hosts():
