@@ -6,8 +6,16 @@ on local[$SPARK_GRAFT_CPUS]; the frontier-throughput job and the N-vs-4N
 core scaling proxy (BASELINE.md) run as subprocesses with their own
 sessions (a JVM cannot change its master).
 
-Output: {"metric": ..., "value": total_sec, "unit": "sec",
-         "queries": {name: sec, ...}, "sf": ...,
+Every headline query and production leg is timed REPEATS (3) times in
+one warmed session, pass by pass (all names, then all names again), with
+a fixed JVM-only control job timed before the first pass and after the
+last (``timing_loop``; ``bench_extra.py time`` runs the same loop).
+
+Output: {"metric": ..., "value": sum of first-pass headline secs,
+         "value_median": sum of headline medians, "unit": "sec",
+         "queries": {name: first-pass sec, ...},
+         "samples": {name: {"samples", "min", "median", "spread"}, ...},
+         "control_s": [before, after], "sf": ...,
          "frontier": {...}, "scaling": {...}}
 
 Env knobs: SPARK_GRAFT_SF_DIR, SPARK_GRAFT_CPUS,
@@ -15,14 +23,14 @@ KIT_BENCH_SCALING=0 to skip the two-size scaling runs,
 KIT_BENCH_SCALE_URLS to resize the frontier job (default 600,000 —
 sized so per-round fixed costs amortize and every clean-window pair
 clears the 0.8 efficiency bar, see BASELINE.md);
+KIT_BENCH_SCALE_CORES the 4N leg's cores (default 8, capped at the CPUs
+this process may use; N is a quarter of it, at least 2);
 KIT_BENCH_TOTAL_BUDGET seconds for the WHOLE run (default 2800 — the
 driver's capture window is ~3600 s and round 4's ~4000 s default run
 timed out against it, rc=124, leaving no official record; segments are
-ordered must-have-first and the optional wide-span measurements run
-only on remaining headroom, each skip recorded under "budget");
+ordered must-have-first, each skip recorded under "budget");
 KIT_BENCH_SCALE_BUDGET seconds of 2->8 scaling legs (default 2400,
-further capped by remaining total budget);
-KIT_BENCH_WIDE=0 to skip the 8->32 context span.
+further capped by remaining total budget).
 """
 
 from __future__ import annotations
@@ -30,9 +38,11 @@ from __future__ import annotations
 import json
 import os
 import shutil
+import statistics
 import subprocess
 import sys
 import time
+from functools import partial
 
 REPO = os.path.dirname(os.path.abspath(__file__))
 sys.path.insert(0, REPO)
@@ -53,56 +63,114 @@ HEADLINE = [
 ]
 
 
-def run_headline(sf_dir: str, cores: int) -> dict:
-    from kit_spark.queries import QUERIES
+PRODUCTION = [
+    "docs_minhash_production",
+    "docs_lsh_pairs_production",
+    "docs_pack_blocks",
+]
+REPEATS = 3  # timed passes over every headline query and production leg
+
+
+def build_session(cores: int):
+    from kit_spark.bench_scaling import warm_udf_workers
     from kit_spark.session import get_spark
 
     spark = get_spark("kit_spark_bench", cores=cores,
                       shuffle_partitions=max(cores, 8))
-    # warm the session + ALL python UDF workers once so per-query times are
-    # job time: a JVM-only warmup leaves every pandas-UDF worker cold and
-    # charges ~2 s/worker of spawn+import to the first UDF query
-    spark.range(1000).selectExpr("sum(id)").collect()
-    from kit_spark.functions.canon import with_canon
+    # warm ALL python UDF workers once so per-query times are job time: a
+    # JVM-only warmup leaves every pandas-UDF worker cold and charges
+    # ~2 s/worker of spawn+import to the first UDF query
+    warm_udf_workers(spark, cores)
+    return spark
 
-    warm = spark.range(0, cores * 512, numPartitions=cores * 2).selectExpr(
-        "concat('https://h', id % 64, '.example.com/i/', id) AS url")
-    with_canon(warm, "url").count()
-    timings: dict[str, float] = {}
-    for name in HEADLINE:
-        t0 = time.perf_counter()
-        QUERIES[name](spark, sf_dir).write.format("noop").mode("overwrite").save()
-        timings[name] = round(time.perf_counter() - t0, 3)
 
-    # production dedup path (xxhash64 minhash -> LSH; the md5_long catalog
-    # twin above is the oracle-portable variant of the same plan) plus the
-    # max-bucket population stat that guards degenerate corpora
-    from pyspark.sql import functions as F
-
+def production_df(spark, sf_dir: str, name: str, cores: int):
+    """One production leg as a DataFrame, built after the previous
+    sample's caches are released.  ``docs_minhash_production`` and
+    ``docs_lsh_pairs_production`` are the xxhash64 minhash -> LSH dedup
+    path (the md5_long catalog twins are the oracle-portable variants of
+    the same plan); ``docs_pack_blocks`` is sequence packing (global
+    token cumsum + block-map explode) over the same corpus."""
+    from kit_spark import lifecycle
     from kit_spark.functions import dedup as DD
+    from kit_spark.functions.packing import pack_sequences
 
+    lifecycle.release()
     # one-row-group testdata file: spread the scan so the shingle/hash
     # chain parallelizes (see kit_spark.queries.load)
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet") \
         .repartition(cores)
-    t0 = time.perf_counter()
+    if name == "docs_pack_blocks":
+        return pack_sequences(docs, 2048)
     sig = DD.minhash_signatures(docs, k=8, n=3, method="xxhash64")
-    sig.write.format("noop").mode("overwrite").save()
-    timings["docs_minhash_production"] = round(time.perf_counter() - t0, 3)
-    t0 = time.perf_counter()
-    DD.lsh_candidate_pairs(sig, k=8, rows_per_band=2, max_bucket=100_000) \
-        .write.format("noop").mode("overwrite").save()
-    timings["docs_lsh_pairs_production"] = round(time.perf_counter() - t0, 3)
-    # sequence packing: global token cumsum + block-map explode over the
-    # same corpus (elapsed includes the action that materializes the map)
+    if name == "docs_minhash_production":
+        return sig
+    if name == "docs_lsh_pairs_production":
+        return DD.lsh_candidate_pairs(sig, k=8, rows_per_band=2,
+                                      max_bucket=100_000)
+    raise KeyError(name)
+
+
+def timing_loop(names: list[str], run_one, control,
+                repeats: int = REPEATS) -> dict:
+    """Time ``run_one(name)`` ``repeats`` times per name, pass by pass
+    (every name once, then every name again, ...), so host drift hits
+    every name alike.  ``control`` is timed before the first pass and
+    after the last; a drift between its two readings is host drift.
+    Returns per-name samples with min, median and spread (max - min),
+    and ``control_s``."""
+    def timed(fn, *args) -> float:
+        t0 = time.perf_counter()
+        fn(*args)
+        return round(time.perf_counter() - t0, 3)
+
+    control_s = [timed(control)]
+    samples: dict[str, list[float]] = {n: [] for n in names}
+    for _ in range(repeats):
+        for name in names:
+            samples[name].append(timed(run_one, name))
+    control_s.append(timed(control))
+    return {"queries": {n: {"samples": s, "min": min(s),
+                            "median": round(statistics.median(s), 3),
+                            "spread": round(max(s) - min(s), 3)}
+                        for n, s in samples.items()},
+            "control_s": control_s}
+
+
+def time_legs(spark, legs: dict, repeats: int = REPEATS) -> dict:
+    """``timing_loop`` over Spark legs (name -> a zero-argument function
+    returning the leg's DataFrame), each sample a noop-sink write; the
+    control is a fixed JVM-only job."""
     from kit_spark import lifecycle
-    from kit_spark.functions.packing import pack_sequences
 
-    t0 = time.perf_counter()
-    pack_sequences(docs, 2048).write.format("noop").mode("overwrite").save()
-    timings["docs_pack_blocks"] = round(time.perf_counter() - t0, 3)
-    lifecycle.release()  # the cumsum's ranked partials
+    def run_one(name):
+        spark.sparkContext.setJobDescription(name)
+        legs[name]().write.format("noop").mode("overwrite").save()
 
+    def control():
+        spark.range(0, 20_000_000, numPartitions=8) \
+            .selectExpr("max(xxhash64(id))").collect()
+
+    control()  # compiled once untimed, so both readings time a warm job
+    out = timing_loop(list(legs), run_one, control, repeats)
+    spark.sparkContext.setJobDescription(None)
+    lifecycle.release()
+    return out
+
+
+def run_headline(sf_dir: str, cores: int):
+    from pyspark.sql import functions as F
+
+    from kit_spark.queries import QUERIES
+
+    spark = build_session(cores)
+    legs = {n: partial(QUERIES[n], spark, sf_dir) for n in HEADLINE}
+    legs.update({n: partial(production_df, spark, sf_dir, n, cores)
+                 for n in PRODUCTION})
+    timed = time_legs(spark, legs)
+
+    # the max-bucket population stat that guards degenerate corpora
+    sig = production_df(spark, sf_dir, "docs_minhash_production", cores)
     bands = (sig.select(F.explode(F.array(*[
         F.struct(F.lit(j).alias("bd"),
                  F.concat_ws("|", F.col(f"h{2 * j}").cast("string"),
@@ -113,7 +181,7 @@ def run_headline(sf_dir: str, cores: int) -> dict:
     max_bucket = int(bands[0]["mx"] or 0)
     ann_recall = _ann_recall(spark, sf_dir)
     spark.stop()
-    return timings, max_bucket, ann_recall
+    return timed, max_bucket, ann_recall
 
 
 def _ann_recall(spark, sf_dir: str) -> dict:
@@ -185,14 +253,12 @@ def _ann_recall(spark, sf_dir: str) -> dict:
     return out
 
 
-def _host_capacity_work(n: int) -> int:
-    # module-level: multiprocessing pickles the mapped callable
-    from kit_spark.kit_py import codec
-    for i in range(n):
-        px = codec.synth_pixels(f"img{i:010d}", 128, 128)
-        codec.psnr(codec.decode_image(
-            codec.encode_image(px, codec.FMT_LOSSY_FAST)), px)
-    return n
+def scale_span(cores_hi: int) -> tuple[int, int]:
+    """The (N, 4N) core counts a scaling pair runs here: the high leg is
+    capped at the CPUs this process may run on, since ``taskset`` onto
+    more CPUs than exist succeeds and pins the leg to fewer."""
+    cores_hi = min(cores_hi, len(os.sched_getaffinity(0)))
+    return max(2, cores_hi // 4), cores_hi
 
 
 def host_parallel_capacity(procs_lo: int = 4, procs_hi: int = 16) -> dict:
@@ -204,21 +270,27 @@ def host_parallel_capacity(procs_lo: int = 4, procs_hi: int = 16) -> dict:
     express 4x."""
     import multiprocessing as mp
 
-    work = _host_capacity_work
+    from kit_spark.bench_scaling import verify_image
+
+    cpus = os.sched_getaffinity(0)
     rates = {}
     for procs in (procs_lo, procs_hi):
         os.sched_setaffinity(0, set(range(procs)))
         with mp.Pool(procs) as pool:
-            pool.map(work, [5] * procs)  # warm imports
+            # images 0-4 (warm imports), then 0-399, on each worker
+            pool.map(verify_image, list(range(5)) * procs, chunksize=5)
             t0 = time.perf_counter()
-            pool.map(work, [400] * procs)
+            pool.map(verify_image, list(range(400)) * procs, chunksize=400)
             rates[procs] = procs * 400 / (time.perf_counter() - t0)
-    os.sched_setaffinity(0, set(range(os.cpu_count())))
+    os.sched_setaffinity(0, cpus)
     ratio = rates[procs_hi] / rates[procs_lo]
     return {"procs_lo": procs_lo, "procs_hi": procs_hi,
             "rows_per_sec_lo": round(rates[procs_lo], 1),
             "rows_per_sec_hi": round(rates[procs_hi], 1),
             "efficiency": round(ratio / (procs_hi / procs_lo), 3)}
+
+
+MAX_PAIRS = 3  # scaling pairs measured at most, congested or not
 
 
 def _scaling_leg(cores: int, n_urls: int, mode: str,
@@ -230,8 +302,8 @@ def _scaling_leg(cores: int, n_urls: int, mode: str,
     # hypervisor — low cores kept for cross-round comparability.)
     pin = (["taskset", "-c", f"0-{cores - 1}"]
            if shutil.which("taskset") else [])
-    # timeout scales with input: the 2.4M-URL big-round low-core leg runs
-    # ~15-20 min clean and must survive a congested window
+    # timeout scales with input: a low-core leg must survive a congested
+    # window
     timeout = max(1800, min(4200, n_urls // 400))
     if timeout_cap is not None:
         # a leg must never be allowed to blow the whole run's budget:
@@ -247,7 +319,7 @@ def _scaling_leg(cores: int, n_urls: int, mode: str,
 
 
 def run_scaling(n_urls: int, cores_hi: int, pairs: int = 2,
-                max_pairs: int = 3, mode: str = "round",
+                mode: str = "round",
                 budget_s: float | None = None) -> dict | None:
     """Paired-leg scaling estimator, robust to hypervisor noise drift.
 
@@ -259,7 +331,7 @@ def run_scaling(n_urls: int, cores_hi: int, pairs: int = 2,
     reverse) and corrupt the ratio in either direction; a tight pair sees
     one noise regime, and minimal-total selection favors the cleanest
     regime without cherry-picking the ratio itself.  Extra pairs (up to
-    ``max_pairs``) are measured only on OUTCOME-INDEPENDENT congestion
+    ``MAX_PAIRS``) are measured only on OUTCOME-INDEPENDENT congestion
     evidence — the engine's own efficiency number never feeds the
     stopping rule (resampling conditioned on the outcome would bias the
     reported efficiency upward): the two cleanest pairs disagree on
@@ -271,8 +343,9 @@ def run_scaling(n_urls: int, cores_hi: int, pairs: int = 2,
     multiprocessing host probe reads below 0.75 (the hypervisor itself
     was congested in that pair's window — the probe's clean 2->8
     baseline is ~0.95, routine neighbor load reads 0.82-0.9).  All
-    measured pairs are reported in ``pairs`` either way."""
-    cores_lo = max(2, cores_hi // 4)
+    measured pairs are reported in ``pairs`` either way.  The span is
+    ``scale_span(cores_hi)``."""
+    cores_lo, cores_hi = scale_span(cores_hi)
     ideal = cores_hi / cores_lo
     budget = float(os.environ.get("KIT_BENCH_SCALE_BUDGET", "2400"))
     if budget_s is not None:
@@ -281,7 +354,7 @@ def run_scaling(n_urls: int, cores_hi: int, pairs: int = 2,
     spent = 0.0
 
     try:
-        for i in range(max_pairs):
+        for i in range(MAX_PAIRS):
             if measured and spent + measured[-1]["total"] > budget:
                 break  # the NEXT pair (≈ the last one's cost) won't fit
             lo = _scaling_leg(cores_lo, n_urls, mode,
@@ -343,14 +416,18 @@ def main() -> None:
     sf = sf_dir.rstrip("/").split("sf")[-1]
 
     t_total = time.perf_counter()
-    timings, max_bucket, ann_recall = run_headline(sf_dir, cores)
+    timed, max_bucket, ann_recall = run_headline(sf_dir, cores)
+    stats = timed["queries"]
 
     result = {
         "metric": ("headline query wall-clock at sf%s; frontier throughput "
                    "and N-vs-4N-core scaling in 'frontier'/'scaling'" % sf),
-        "value": round(sum(timings[n] for n in HEADLINE), 3),
+        "value": round(sum(stats[n]["samples"][0] for n in HEADLINE), 3),
+        "value_median": round(sum(stats[n]["median"] for n in HEADLINE), 3),
         "unit": "sec",
-        "queries": timings,
+        "queries": {n: s["samples"][0] for n, s in stats.items()},
+        "samples": stats,
+        "control_s": timed["control_s"],
         "lsh_max_bucket": max_bucket,
         "ann_recall": ann_recall,
         "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
@@ -359,11 +436,9 @@ def main() -> None:
 
     # total-run budget: the driver captures bench output under a ~3600 s
     # timeout; round 4's ~4000 s default run hit it (rc=124) and left NO
-    # official record.  Segments below run must-have-first; the optional
-    # wide-span measurements only run on remaining headroom and every
+    # official record.  Segments below run must-have-first, and every
     # skip is recorded so an empty field reads as "skipped: <why>", never
-    # as silence.  Cost estimates are the r4 validation-run actuals
-    # (BENCH/BASELINE.md) with congestion margin.
+    # as silence.
     total_budget = float(os.environ.get("KIT_BENCH_TOTAL_BUDGET", "2800"))
     skipped: dict[str, str] = {}
 
@@ -380,14 +455,11 @@ def main() -> None:
         # express 4x.  Raw multiprocessing probes (host_capacity below,
         # recorded each run): ~0.95 at 2 -> 8, ~0.87-1.0 at 4 -> 16
         # drifting with neighbor load, ~0.73 at 8 -> 32 even for a pure
-        # register loop.  Wider spans measure the hypervisor's ceiling,
-        # not the engine — so the 8 -> 32 span is ALSO reported below
-        # (scaling_wide + host_capacity_wide) as context: the engine's
-        # scaling loss there is the gap between job and probe at the
-        # SAME span.  BASELINE.md documents this methodology.
-        scale_hi = int(os.environ.get("KIT_BENCH_SCALE_CORES", "8"))
-        result["host_capacity"] = host_parallel_capacity(
-            max(2, scale_hi // 4), scale_hi)
+        # register loop; wider spans measure the hypervisor's ceiling,
+        # not the engine.  BASELINE.md documents this methodology.
+        scale_lo, scale_hi = scale_span(
+            int(os.environ.get("KIT_BENCH_SCALE_CORES", "8")))
+        result["host_capacity"] = host_parallel_capacity(scale_lo, scale_hi)
         # the REQUIRED measurement (the north rule's >=0.8 N->4N bar):
         # gets the lion's share of the budget, minus a reserve for the
         # compute control + frontier throughput that must still run after
@@ -421,50 +493,6 @@ def main() -> None:
                 result["frontier"] = {"n_urls": scaling["n_urls"],
                                       "cores": scale_hi,
                                       "urls_per_sec": scaling["throughput_4n"]}
-        if cores >= 4 * scale_hi and os.environ.get("KIT_BENCH_WIDE",
-                                                    "1") != "0":
-            result["host_capacity_wide"] = host_parallel_capacity(
-                scale_hi, cores)
-            # the AMORTIZATION measurement (BASELINE.md "Wide span") runs
-            # FIRST of the two wide-span segments — since round 4 it
-            # carries the wide-span story: one 4x-sized round at the
-            # 8 -> 32 span.  The default 600k round reads ~0.3 efficiency
-            # here because ~15-25 s of core-count-independent fixed cost
-            # (stage scheduling) is a large share of a ~60 s 32-core leg;
-            # a production round is >=10^7 URLs, where that cost is
-            # noise.  The big round quadruples the parallel work W so the
-            # fixed cost amortizes 4x; its per-pair host_eff probe is the
-            # same-window hypervisor ceiling to read the engine number
-            # against.  r4 actual: ~750 s.
-            if os.environ.get("KIT_BENCH_WIDE_BIG", "1") == "0":
-                skipped["scaling_wide_biground"] = "KIT_BENCH_WIDE_BIG=0"
-            elif left() > 1000:
-                result["scaling_wide_biground"] = run_scaling(
-                    n_urls * 4, cores, pairs=1, max_pairs=1,
-                    budget_s=left() - 100.0)
-                result["scaling_wide_biground"]["note"] = (
-                    "4x round size at the 8->32 span: fixed-cost "
-                    "amortization measurement; compare 'efficiency' to "
-                    "this pair's own host_eff probe, and to "
-                    "'scaling_wide' (same span, 1x size)")
-            else:
-                skipped["scaling_wide_biground"] = (
-                    "budget (%.0f s left, needs ~1000)" % left())
-            # the 1x-size pair at the same span: CONTEXT only (the
-            # hypervisor itself caps at ~0.73-0.88 here and single
-            # 32-core legs swing 67-295 s on identical config) — lowest
-            # priority, runs only on leftover headroom.  r4: ~200-450 s.
-            if left() > 500:
-                result["scaling_wide"] = run_scaling(
-                    n_urls, cores, pairs=1, max_pairs=2,
-                    budget_s=left() - 100.0)
-                result["scaling_wide"]["note"] = (
-                    "context span: the hypervisor itself caps at "
-                    "~%.2f here (host_capacity_wide); engine number is "
-                    "'scaling'" % result["host_capacity_wide"]["efficiency"])
-            else:
-                skipped["scaling_wide"] = (
-                    "budget (%.0f s left, needs ~500)" % left())
     result["budget"] = {"total_s": total_budget, "skipped": skipped}
     result["total_wall_sec"] = round(time.perf_counter() - t_total, 1)
     # durable copy: the driver's captured stdout has truncated mid-JSON

@@ -1,16 +1,19 @@
 #!/usr/bin/env python
-"""Optimization-round measurement harness (guide §1) — bench.py is FROZEN
-for the driver's capture, so the per-query isolation work lives here.
+"""Per-query measurement harness beside bench.py.
 
 Modes:
 
-* ``time``  — run each named query (default: the 12 headline + 3
-  production legs) through the noop sink N times in one warmed session
-  and print per-query samples + min.  Same session config, warmup and
-  methodology as bench.py's run_headline, so numbers are comparable.
+* ``time``  — run each named query (default: the 12 headline queries +
+  3 production legs) through bench.py's timing loop: ``--repeats``
+  passes in one warmed session, bracketed by the control job, printing
+  per-query samples with min, median and spread.
 * ``plans`` — write ``.explain('formatted')`` for each named query to
-  ``--out/<name>_<suffix>.txt`` (the judge-facing plan evidence in
-  plans/r06/).
+  ``--out/<name>_<suffix>.txt`` (the plan evidence in ``plans/``).
+* ``ann``   — recall@10 of the ANN paths on a clustered corpus.
+
+Names are catalog entries or production legs; ``docs_pack_blocks``
+names the oracled catalog entry here, so the packing production leg
+runs as ``docs_pack_blocks_bench``.
 
 Usage:
     python bench_extra.py time  [--repeats 3] [--names a,b,...]
@@ -25,68 +28,26 @@ import io
 import json
 import os
 import sys
-import time
+from functools import partial
 
 REPO = os.path.dirname(os.path.abspath(__file__))
 sys.path.insert(0, REPO)
 
-HEADLINE = [
-    "q1_pricing_summary",
-    "revenue_by_nation",
-    "top3_customers_per_segment",
-    "orders_running_window",
-    "events_sessionize",
-    "url_canonicalize",
-    "politeness_schedule",
-    "robots_gate",
-    "docs_minhash_signature",
-    "docs_lsh_pairs",
-    "emb_cosine_topk",
-    "frontier_round",
-]
-PRODUCTION = ["docs_minhash_production", "docs_lsh_pairs_production",
-              "docs_pack_blocks_bench"]
+import bench  # noqa: E402
+
+# ``docs_pack_blocks`` names an oracled catalog entry here, so bench.py's
+# packing production leg runs under this alias
+PACK_LEG = "docs_pack_blocks_bench"
 
 
-def _production_df(spark, sf_dir: str, name: str, cores: int):
-    """The three bench.py production legs, reproduced as DataFrames."""
-    from kit_spark.functions import dedup as DD
-    from kit_spark.functions.packing import pack_sequences
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet") \
-        .repartition(cores)
-    if name == "docs_minhash_production":
-        return DD.minhash_signatures(docs, k=8, n=3, method="xxhash64")
-    if name == "docs_lsh_pairs_production":
-        sig = DD.minhash_signatures(docs, k=8, n=3, method="xxhash64")
-        return DD.lsh_candidate_pairs(sig, k=8, rows_per_band=2,
-                                      max_bucket=100_000)
-    if name == "docs_pack_blocks_bench":
-        return pack_sequences(docs, 2048)
-    raise KeyError(name)
-
-
-def build_session(cores: int):
-    from kit_spark.functions.canon import with_canon
-    from kit_spark.session import get_spark
-
-    spark = get_spark("kit_spark_bench_extra", cores=cores,
-                      shuffle_partitions=max(cores, 8))
-    spark.range(1000).selectExpr("sum(id)").collect()
-    warm = spark.range(0, cores * 512, numPartitions=cores * 2).selectExpr(
-        "concat('https://h', id % 64, '.example.com/i/', id) AS url")
-    with_canon(warm, "url").count()
-    return spark
-
-
-def _build(spark, sf_dir: str, name: str, cores: int):
-    from kit_spark import lifecycle
+def _leg(spark, sf_dir: str, name: str, cores: int):
+    """A zero-argument function returning ``name``'s DataFrame."""
     from kit_spark.queries import QUERIES
 
     if name in QUERIES:
-        return QUERIES[name](spark, sf_dir)
-    lifecycle.release()
-    return _production_df(spark, sf_dir, name, cores)
+        return partial(QUERIES[name], spark, sf_dir)
+    return partial(bench.production_df, spark, sf_dir,
+                   "docs_pack_blocks" if name == PACK_LEG else name, cores)
 
 
 def ann_clustered_recall(spark, n: int = 2000, clusters: int = 20,
@@ -147,24 +108,24 @@ def main() -> None:
 
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     cores = int(os.environ.get("SPARK_GRAFT_CPUS", "0")) or os.cpu_count() or 8
-    names = (args.names.split(",") if args.names
-             else HEADLINE + PRODUCTION)
+    names = (args.names.split(",") if args.names else bench.HEADLINE + [
+        PACK_LEG if n == "docs_pack_blocks" else n for n in bench.PRODUCTION])
 
     from kit_spark import lifecycle
 
-    spark = build_session(cores)
+    spark = bench.build_session(cores)
     if args.mode == "ann":
         print(json.dumps({"ann_recall_clustered":
                           ann_clustered_recall(spark)}))
         spark.stop()
         return
+    legs = {n: _leg(spark, sf_dir, n, cores) for n in names}
     if args.mode == "plans":
         os.makedirs(args.out, exist_ok=True)
-        for name in names:
-            df = _build(spark, sf_dir, name, cores)
+        for name, build in legs.items():
             buf = io.StringIO()
             with contextlib.redirect_stdout(buf):
-                df.explain("formatted")
+                build().explain("formatted")
             path = os.path.join(args.out, f"{name}_{args.suffix}.txt")
             with open(path, "w") as fh:
                 fh.write(buf.getvalue())
@@ -173,22 +134,15 @@ def main() -> None:
         spark.stop()
         return
 
-    out: dict = {}
-    for name in names:
-        samples = []
-        for i in range(args.repeats):
-            spark.sparkContext.setJobDescription(f"{name}#{i}")
-            t0 = time.perf_counter()
-            _build(spark, sf_dir, name, cores) \
-                .write.format("noop").mode("overwrite").save()
-            samples.append(round(time.perf_counter() - t0, 3))
-        spark.sparkContext.setJobDescription(None)
-        out[name] = {"min": min(samples), "samples": samples}
-        print(json.dumps({name: out[name]}), flush=True)
-    lifecycle.release()
-    total_min = sum(v["min"] for k, v in out.items() if k in HEADLINE)
-    print(json.dumps({"headline_sum_of_mins": round(total_min, 3),
-                      "queries": out, "sf_dir": sf_dir, "cores": cores}))
+    timed = bench.time_legs(spark, legs, args.repeats)
+    out = timed["queries"]
+    print(json.dumps({
+        "headline_sum_of_mins": round(sum(
+            v["min"] for k, v in out.items() if k in bench.HEADLINE), 3),
+        "value_median": round(sum(
+            v["median"] for k, v in out.items() if k in bench.HEADLINE), 3),
+        "control_s": timed["control_s"],
+        "queries": out, "sf_dir": sf_dir, "cores": cores}))
     spark.stop()
 
 

@@ -23,6 +23,44 @@ import json
 import sys
 import time
 
+from kit_spark.kit_py import codec
+
+
+def verify_image(i: int) -> bool:
+    """The per-row fetch invariant every bench leg times: synthesize image
+    ``i`` at 128x128, encode it with the fast lossy stand-in, decode it,
+    and require PSNR >= 40 dB.  Module-level so that multiprocessing can
+    pickle it.  128x128 approximates real thumbnail decode cost — crawls
+    are decode-dominated, not bookkeeping-dominated.  The FAST stand-in
+    codec (zlib-bound) proxies a C jpeg codec's per-row cost; the in-repo
+    pure-Python JPEG (kit_py/jpeg.py) is real but ~50x slower than
+    libjpeg-turbo, so timing it would benchmark the interpreter, not the
+    engine."""
+    px = codec.synth_pixels(f"img{i:010d}", 128, 128)
+    data = codec.encode_image(px, codec.FMT_LOSSY_FAST)
+    return codec.psnr(codec.decode_image(data), px) >= 40.0
+
+
+def _verify_batches(batches):
+    import pandas as pd
+
+    for pdf in batches:
+        yield pd.DataFrame({"ok": [verify_image(0)] * len(pdf)})
+
+
+def warm_udf_workers(spark, cores: int) -> None:
+    """Start and warm every Python UDF worker before a timed window:
+    local[N] keeps one worker per core, and each cold one costs ~2 s of
+    process spawn + pandas/kit_spark import.  Runs the canon UDF and the
+    fetch-verify kernel over ``cores * 2`` partitions, so every worker
+    imports both."""
+    from kit_spark.functions.canon import with_canon
+
+    warm = spark.range(0, cores * 1024, numPartitions=cores * 2).selectExpr(
+        "concat('https://h', id % 64, '.example.com/img/', id, '.png') AS url")
+    with_canon(warm, "url").count()
+    warm.mapInPandas(_verify_batches, "ok boolean").count()
+
 
 def build_frontier_job(spark, n_urls: int):
     from pyspark.sql import functions as F
@@ -61,25 +99,7 @@ def run(cores: int, n_urls: int) -> dict:
     urls, seen, n_hosts = build_frontier_job(spark, n_urls)
     seen = seen.cache()
     seen.count()  # warm: materialize the seen set outside the timed window
-    # warm ALL Python UDF workers (process spawn + pandas/kit_spark import
-    # is ~2s per worker; local[N] keeps one worker per core, and a
-    # limit(2048) warmup would only ever spawn one or two of them, leaving
-    # the remaining N-2 cold spawns inside the timed window)
-    from kit_spark.functions.canon import with_canon
-    warm = spark.range(0, cores * 1024, numPartitions=cores * 2).selectExpr(
-        "concat('https://h', id % 64, '.example.com/img/', id, '.png') AS url")
-    with_canon(warm, "url").count()
-    import pandas as _pd
-
-    def _warm_codec(batches):
-        from kit_spark.kit_py import codec
-        for pdf in batches:
-            px = codec.synth_pixels("warm", 16, 16)
-            codec.psnr(codec.decode_image(codec.encode_image(
-                px, codec.FMT_LOSSY_FAST)), px)
-            yield _pd.DataFrame({"ok": [True] * len(pdf)})
-
-    warm.mapInPandas(_warm_codec, "ok boolean").count()
+    warm_udf_workers(spark, cores)
 
     robots_body = (b"User-agent: *\nDisallow: /private/\nDisallow: /*.tmp$\n"
                    b"Allow: /img/\nCrawl-delay: 0.01\n")
@@ -101,28 +121,12 @@ def run(cores: int, n_urls: int) -> dict:
     # table IO is measured — only the decode/verify compute.
     import pandas as pd
 
-    from kit_spark.kit_py import codec
-
     def fetch_verify(batches):
         for pdf in batches:
             ids = pdf["url_canon"].str.extract(r"/img/(\d+)\.png$")[0]
-            ok = []
-            for sid in ids.tolist():
-                if sid is None:
-                    ok.append(False)
-                    continue
-                image_id = f"img{int(sid):010d}"
-                # 128x128 approximates real thumbnail decode cost — crawls
-                # are decode-dominated, not bookkeeping-dominated.  The
-                # FAST stand-in codec (zlib-bound) proxies a C jpeg codec's
-                # per-row cost; the in-repo pure-Python JPEG (kit_py/jpeg.py)
-                # is real but ~50x slower than libjpeg-turbo, so timing it
-                # here would benchmark the interpreter, not the engine.
-                px = codec.synth_pixels(image_id, 128, 128)
-                data = codec.encode_image(px, codec.FMT_LOSSY_FAST)
-                decoded = codec.decode_image(data)
-                ok.append(codec.psnr(decoded, px) >= 40.0)
-            yield pd.DataFrame({"fetch_ok": ok})
+            yield pd.DataFrame({"fetch_ok": [
+                sid is not None and verify_image(int(sid))
+                for sid in ids.tolist()]})
 
     # explicit repartition: AQE must not coalesce the CPU-bound verify
     # stage (REPARTITION_BY_NUM is preserved by AQE)
@@ -150,7 +154,6 @@ def run_compute(cores: int, n_rows: int) -> dict:
     """
     import pandas as pd
 
-    from kit_spark.kit_py import codec
     from kit_spark.session import get_spark
 
     spark = get_spark(f"bench_compute_{cores}", cores=cores,
@@ -160,13 +163,8 @@ def run_compute(cores: int, n_rows: int) -> dict:
 
     def work(batches):
         for pdf in batches:
-            ok = []
-            for i in pdf["id"].tolist():
-                image_id = f"img{i:010d}"
-                px = codec.synth_pixels(image_id, 128, 128)
-                data = codec.encode_image(px, codec.FMT_LOSSY_FAST)
-                ok.append(codec.psnr(codec.decode_image(data), px) >= 40.0)
-            yield pd.DataFrame({"ok": ok})
+            yield pd.DataFrame({"ok": [verify_image(i)
+                                       for i in pdf["id"].tolist()]})
 
     from pyspark.sql import functions as F
     base.limit(64).mapInPandas(work, "ok boolean").count()  # warm workers

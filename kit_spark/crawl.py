@@ -57,8 +57,7 @@ from kit_spark.operators.frontier import (admit_candidates,
                                           sequence_schedule)
 from kit_spark.operators.sitemap_expand import expand_sitemaps_df
 from kit_spark.sources.tables import (SnapshotStore, append_pinned,
-                                      bucketed_by_url, commit_log,
-                                      read_pinned)
+                                      commit_log, read_pinned)
 
 CANDIDATE_SCHEMA = "url string, priority double"
 FRONTIER_SCHEMA = ("url_canon string, host_key string, match_path string, "
@@ -75,7 +74,6 @@ METRICS_SCHEMA = ("round int, candidates_in long, admitted long, denied long, "
 LINEAGE_SCHEMA = "round int, table string, snapshot string, rows long"
 
 COMMIT_TABLE = "driver_state"  # the commit log; its rows are the lineage
-SEEN_BUCKETS = 16  # url_seen's stable bucket layout (bucketed_by_url)
 
 
 class RoundPlan(NamedTuple):
@@ -307,9 +305,8 @@ class CrawlDriver:
         # threads so their stage-scheduling latencies overlap instead of
         # adding up — this fixed cost, not compute, dominated small rounds
         wave1 = [
-            ("url_seen", dict(df=bucketed_by_url(
-                plan.admitted.select("url_canon"), SEEN_BUCKETS),
-                delta=True)),
+            ("url_seen", dict(df=plan.admitted.select("url_canon"),
+                              delta=True)),
             ("robots_cache", dict(df=plan.robots_new, delta=True)),
             ("frontier", dict(df=plan.pending.join(
                 schedule.select("url_canon"), "url_canon",

@@ -6,10 +6,9 @@ cluster; sandbox tests only shrink the data, not the plan shape):
 
 * Admission dedups with ``groupBy(url_canon).max(priority)`` (map-side
   partial agg) followed by a **left_anti** join against ``url_seen`` —
-  both shuffle on ``url_canon``, and url_seen is written bucketed by
-  ``xxhash64(url_canon)`` so the anti-join co-locates (see
-  sources/tables.py).  A Bloom prefilter (functions/bloom.py) prunes the
-  anti-join probe side; exactness always comes from the anti-join.
+  both shuffle on ``url_canon`` (or url_seen broadcasts while it is
+  small).  A Bloom prefilter (functions/bloom.py) prunes the anti-join
+  probe side; exactness always comes from the anti-join.
 * Politeness is a per-host top-k: one ``row_number`` window over
   ``host_key`` bounded by a literal ``L`` (the round's largest budget).
   Spark's WindowGroupLimit (SPARK-37099) then plans a Partial limit below

@@ -1407,31 +1407,28 @@ FROM events GROUP BY 1, 2
 """)
 def events_hourly_stream(spark, sf_dir):
     """Structured Streaming windowed aggregation driven to completion via
-    the memory sink; falls back to the equivalent batch plan if the file
-    stream source rejects the single-file glob."""
+    the memory sink.  The file source streams the testdata directory
+    filtered to the events file: pointed at the single file itself it
+    fails (``basePath`` must be a directory)."""
+    import uuid
+
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     ev = load(spark, sf_dir, "events")
-    agg_cols = [F.count("*").alias("n"),
-                _dsum(F.col("value")).alias("total_value")]
-    try:
-        import uuid
-
-        # a uuid (not hash(sf_dir): per-process randomized, reruns within
-        # one session could collide with a stale memory-sink view)
-        name = f"events_stream_{uuid.uuid4().hex[:12]}"
-        stream = (spark.readStream.schema(ev.schema)
-                  .parquet(f"{sf_dir}/events.parquet"))
-        q = (stream.groupBy(F.window("ts", "1 hour"), "event_type")
-             .agg(*agg_cols)
-             .writeStream.outputMode("complete")
-             .format("memory").queryName(name).start())
-        q.processAllAvailable()
-        q.stop()
-        out = spark.sql(f"SELECT * FROM {name}")  # noqa: S608
-    except Exception:
-        out = ev.groupBy(F.window("ts", "1 hour"), "event_type").agg(*agg_cols)
-    return out.select(F.col("window.start").alias("window_start"),
-                      "event_type", "n", "total_value")
+    # a uuid (not hash(sf_dir): per-process randomized, reruns within
+    # one session could collide with a stale memory-sink view)
+    name = f"events_stream_{uuid.uuid4().hex[:12]}"
+    stream = (spark.readStream.schema(ev.schema)
+              .option("pathGlobFilter", "events.parquet").parquet(sf_dir))
+    q = (stream.groupBy(F.window("ts", "1 hour"), "event_type")
+         .agg(F.count("*").alias("n"),
+              _dsum(F.col("value")).alias("total_value"))
+         .writeStream.outputMode("complete")
+         .format("memory").queryName(name).start())
+    q.processAllAvailable()
+    q.stop()
+    return spark.sql(f"SELECT * FROM {name}").select(  # noqa: S608
+        F.col("window.start").alias("window_start"),
+        "event_type", "n", "total_value")
 
 
 @query("img_decode_stats")

@@ -11,10 +11,7 @@ pointer.  Semantics preserved relative to Iceberg:
 * readers resolve through ``_CURRENT`` (os.replace — atomic on POSIX), so a
   crash mid-write leaves the previous snapshot current: checkpoint/resume
   reads a consistent set of tables;
-* ``history`` exposes snapshot ids;
-* bucketed layout for the url_seen table: writers pre-repartition by
-  ``pmod(xxhash64(url_canon), n_buckets)`` so the per-round anti-join
-  reuses a stable partitioning (Iceberg ``bucket(url_canon)`` analog).
+* ``history`` exposes snapshot ids.
 
 The checkpoint protocol the crawl driver, the curation stream and
 ``curate_job --state-dir`` share lives here too (``read_pinned``,
@@ -29,7 +26,7 @@ import json
 import os
 import tempfile
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, SparkSession
 
 
 def iceberg_catalog_name(spark: SparkSession) -> str | None:
@@ -360,12 +357,3 @@ def commit_log(store, log: str, rows: DataFrame, pins: dict[str, str],
     default parent is the last commit, and ``store.meta(log)`` is the
     committed state a resume reads."""
     store.append(log, rows, meta={**meta, "pins": pins})
-
-
-def bucketed_by_url(df: DataFrame, n_buckets: int,
-                    url_col: str = "url_canon") -> DataFrame:
-    """Stable bucket layout for url_seen (Iceberg bucket-partition analog):
-    co-locates the anti-join probe across rounds."""
-    return df.repartition(n_buckets, F.pmod(F.xxhash64(url_col),
-                                            F.lit(n_buckets)))
-

@@ -69,6 +69,14 @@ def test_rows_only_queries_run(spark):
         assert df.count() >= 0, name
 
 
+def test_events_hourly_stream_runs_its_stream(spark):
+    # the entry's stream query must end cleanly: a failed stream used to
+    # be swallowed, and the entry returned the batch plan instead
+    spark.streams.resetTerminated()
+    entry_mod.queries()["events_hourly_stream"](spark, SF_DIR).count()
+    spark.streams.awaitAnyTermination(5)
+
+
 def test_entry_smoke(spark):
     df = entry_mod.entry(spark)
     assert df.count() > 0
